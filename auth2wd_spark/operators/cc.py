@@ -20,6 +20,7 @@ import os
 from pyspark.sql import DataFrame, functions as F
 
 from ..properties import P_VIAF, SUPPORTED_PROPERTIES
+from .linking import LINK_BROADCAST_MAX_ROWS
 
 EDGE_PROPERTIES = tuple(sorted(set(SUPPORTED_PROPERTIES) | {P_VIAF}))
 
@@ -63,23 +64,9 @@ LOCAL_CC_THRESHOLD = int(os.environ.get("AUTH2WD_CC_LOCAL_THRESHOLD", "32000000"
 # a 4-12× slower plan at sandbox scale. Past the cap, edges genuinely
 # outgrow one machine and the distributed star rewrites are the only path.
 LOCAL_CC_BYTE_CAP = int(os.environ.get("AUTH2WD_CC_LOCAL_BYTE_CAP", str(1024 * 1024 * 1024)))
-# OPT-IN (>0 engages): key-byte volume beyond which the driver path ships
-# xxhash64-encoded int64 edge endpoints instead of the key strings.
-# Hypothesis tested round 5 (BENCH/cc_hashed_ab_result.json, 5M edges /
-# 247 MB keys): the int64 variant measured 26.6-57.5 s vs 18.2-19.7 s for
-# the exact-string path — the Arrow string transfer is NOT the floor
-# (toArrow 1.4 s, dictionary_encode 1.7 s; the numpy union-find sweep
-# itself, 4.0 s, is the largest driver-side term), and the hashed
-# variant's extra distributed relabel jobs (distinct over 2·E strings +
-# two joins) cost more than they save. Default 0 = disabled; kept as a
-# knob because on a REAL cluster (network-attached driver, slower
-# transfer) the trade could invert.
-LOCAL_CC_HASHED_MIN_BYTES = int(os.environ.get("AUTH2WD_CC_HASHED_MIN_BYTES", "0"))
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 25, checkpoint: bool = True
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """edges (src, dst) → (node, component) with component = min node id.
 
     Two physical strategies behind one contract (both deterministic —
@@ -99,8 +86,7 @@ def connected_components(
     """
     spark = edges.sparkSession
     proper = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    if checkpoint:
-        proper = proper.localCheckpoint()  # one materialization feeds both paths
+    proper = proper.localCheckpoint()  # one materialization feeds both paths
     stats = proper.agg(
         F.count(F.lit(1)).alias("n"),
         # octet_length, not length: the cap reasons about driver heap BYTES,
@@ -116,15 +102,11 @@ def connected_components(
     # applies minimum.at on both endpoint arrays, so symmetrization (and
     # the big distinct shuffle it costs) is only paid on the star path.
     if n_edges <= LOCAL_CC_THRESHOLD and (stats["key_bytes"] or 0) <= LOCAL_CC_BYTE_CAP:
-        if 0 < LOCAL_CC_HASHED_MIN_BYTES < (stats["key_bytes"] or 0):
-            return _driver_union_find_hashed(spark, proper)
         return _driver_union_find(spark, proper)
 
     sym = proper.union(
         proper.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    if checkpoint:
-        sym = sym.localCheckpoint()
+    ).distinct().localCheckpoint()
 
     # run the iterative rewrites on 64-bit hashed node ids (≈half the
     # shuffle bytes of the string keys and cheaper comparisons), then
@@ -132,16 +114,17 @@ def connected_components(
     # Collision odds at 64 bits are ~n²/2⁶⁵ (≈1e-7 at 10M nodes); a
     # trillion-node deployment swaps in a 128-bit key.
     nodes = (
-        sym.select(F.col("src").alias("node")).distinct().withColumn("h", F.xxhash64("node"))
+        sym.select(F.col("src").alias("node"))
+        .distinct()
+        .withColumn("h", F.xxhash64("node"))
+        .localCheckpoint()
     )
-    if checkpoint:
-        nodes = nodes.localCheckpoint()
     hsym = (
         sym.join(nodes.select(F.col("node").alias("src"), F.col("h").alias("hsrc")), "src")
         .join(nodes.select(F.col("node").alias("dst"), F.col("h").alias("hdst")), "dst")
         .select(F.col("hsrc").alias("src"), F.col("hdst").alias("dst"))
     )
-    hlabels = _large_small_star(hsym, max_iter=max_iter, checkpoint=checkpoint)
+    hlabels = _large_small_star(hsym, max_iter=max_iter)
     labeled = hlabels.join(nodes.select("node", F.col("h").alias("node_h")).withColumnRenamed("node", "node_str"),
                            hlabels["node"] == F.col("node_h")).select(
         F.col("node_str").alias("node"), F.col("component").alias("hcomp")
@@ -150,27 +133,6 @@ def connected_components(
     return labeled.join(canonical, "hcomp").select(
         "node", F.col("canonical").alias("component")
     )
-
-
-def _min_label_sweep(e_src, e_dst, n_nodes: int):
-    """Vectorized min-label propagation with pointer jumping over coded
-    edge arrays — the shared core of all three driver paths. The label
-    vector is monotonically non-increasing, so the loop provably
-    terminates; returns the final parent array (root code per node)."""
-    import numpy as np
-
-    parent = np.arange(n_nodes, dtype=np.int64)
-    while True:
-        m = np.minimum(parent[e_src], parent[e_dst])
-        before = parent
-        parent = parent.copy()
-        np.minimum.at(parent, e_src, m)
-        np.minimum.at(parent, e_dst, m)
-        for _ in range(3):  # pointer jumping halves tree height per pass
-            parent = parent[parent]
-        if np.array_equal(before, parent):
-            break
-    return parent
 
 
 def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
@@ -187,22 +149,13 @@ def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
     distributed path's `min(node)` exactly.
 
     Measured at 5.3M edges / 3.16M nodes (the 800k-person scaling corpus):
-    8.6 s total, vs 72 s for the round-2 pandas version — toPandas object
-    conversion (29 s) and pandas object-dtype groupby-min (30 s) were the
-    "serial CC floor" every scaling session measured; the union-find
-    itself is ~1.5 s. The label vector is monotonically non-increasing,
-    so the loop provably terminates.
+    8.6 s total, of which the union-find itself is ~1.5 s.
     """
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-    try:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        tbl = edges.select("src", "dst").toArrow()
-    except (ImportError, AttributeError):  # pre-Arrow-API Spark: pandas path
-        return _driver_union_find_pandas(spark, edges)
-
+    tbl = edges.select("src", "dst").toArrow()
     # large_string: 64-bit offsets, so a raised AUTH2WD_CC_LOCAL_BYTE_CAP
     # (>2 GiB of keys) cannot overflow combine_chunks' int32 offset space
     combined = (
@@ -216,8 +169,20 @@ def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
     n_edges = tbl.num_rows
     e_src = codes[:n_edges]
     e_dst = codes[n_edges:]
-    parent = _min_label_sweep(e_src, e_dst, len(dictionary))
     n = len(dictionary)
+    # min-label propagation with pointer jumping; the label vector is
+    # monotonically non-increasing, so the loop provably terminates
+    parent = np.arange(n, dtype=np.int64)
+    while True:
+        m = np.minimum(parent[e_src], parent[e_dst])
+        before = parent
+        parent = parent.copy()
+        np.minimum.at(parent, e_src, m)
+        np.minimum.at(parent, e_dst, m)
+        for _ in range(3):  # pointer jumping halves tree height per pass
+            parent = parent[parent]
+        if np.array_equal(before, parent):
+            break
     sort_idx = pc.sort_indices(dictionary).to_numpy().astype(np.int64)
     rank = np.empty(n, dtype=np.int64)
     rank[sort_idx] = np.arange(n)
@@ -230,86 +195,7 @@ def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
     return spark.createDataFrame(out)
 
 
-def _driver_union_find_hashed(spark, edges: DataFrame) -> DataFrame:
-    """Driver union-find over xxhash64-ENCODED endpoints (round 5).
-
-    Executors hash both key strings, so the driver fetches two int64
-    columns (16 bytes/edge) instead of the raw keys — at 7M edges that is
-    ~110 MB vs ~450 MB of Arrow string buffers, and the per-leg serial
-    term that capped every scaling session shrinks proportionally. The
-    min-label sweep runs in hash space (np.unique interning — an int64
-    sort, no string objects); the published component id must still be
-    the lexicographic-min member STRING, so the (hash → root-hash) result
-    ships back as an Arrow table and the relabel (distinct nodes →
-    groupBy(root) min(node) → join) runs DISTRIBUTED — work that scales
-    with executors instead of adding to the driver floor.
-
-    Collision odds are the star path's documented ~n²/2⁶⁵ trade
-    (cc.py:107); the exact-string path below remains the default under
-    LOCAL_CC_HASHED_MIN_BYTES.
-    """
-    import numpy as np
-
-    try:
-        import pyarrow as pa
-
-        tbl = edges.select(
-            F.xxhash64("src").alias("hsrc"), F.xxhash64("dst").alias("hdst")
-        ).toArrow()
-    except (ImportError, AttributeError):
-        return _driver_union_find_pandas(spark, edges)
-
-    hs = tbl.column("hsrc").combine_chunks().to_numpy(zero_copy_only=False)
-    hd = tbl.column("hdst").combine_chunks().to_numpy(zero_copy_only=False)
-    both = np.concatenate([hs, hd])
-    uniq, codes = np.unique(both, return_inverse=True)
-    n_edges = len(hs)
-    e_src = codes[:n_edges].astype(np.int64)
-    e_dst = codes[n_edges:].astype(np.int64)
-    parent = _min_label_sweep(e_src, e_dst, len(uniq))
-    # no localCheckpoint: the table is already driver-local (LocalTableScan)
-    # and checkpointed blocks here would leak per invocation — a long-lived
-    # session calling CC repeatedly would grow storage memory without bound
-    hmap = spark.createDataFrame(
-        pa.table({"h": pa.array(uniq), "root_h": pa.array(uniq[parent])})
-    )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .withColumn("h", F.xxhash64("node"))
-    )
-    labeled = nodes.join(hmap, "h").select("node", "root_h")
-    canonical = labeled.groupBy("root_h").agg(F.min("node").alias("component"))
-    return labeled.join(canonical, "root_h").select("node", "component")
-
-
-def _driver_union_find_pandas(spark, edges: DataFrame) -> DataFrame:
-    """Fallback for Spark builds without toArrow/Arrow-table createDataFrame."""
-    import numpy as np
-    import pandas as pd
-
-    old_arrow = spark.conf.get("spark.sql.execution.arrow.pyspark.enabled", "false")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    try:
-        pdf = edges.select("src", "dst").toPandas()
-
-        both = np.concatenate([pdf["src"].to_numpy(), pdf["dst"].to_numpy()])
-        codes, nodes = pd.factorize(both)
-        n_edges = len(pdf)
-        e_src = codes[:n_edges]
-        e_dst = codes[n_edges:]
-        parent = _min_label_sweep(e_src, e_dst, len(nodes))
-        out = pd.DataFrame({"node": nodes, "root": parent})
-        out["component"] = out["root"].map(out.groupby("root")["node"].min())
-        return spark.createDataFrame(
-            out[["node", "component"]], "node STRING, component STRING"
-        )
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", old_arrow)
-
-
-def _large_small_star(sym: DataFrame, max_iter: int, checkpoint: bool) -> DataFrame:
+def _large_small_star(sym: DataFrame, max_iter: int) -> DataFrame:
     """Alternating large-star/small-star over the edge set."""
     spark = sym.sparkSession
     # Catalyst's union constraint rewriting can fail with
@@ -318,12 +204,12 @@ def _large_small_star(sym: DataFrame, max_iter: int, checkpoint: bool) -> DataFr
     old_cp = spark.conf.get("spark.sql.constraintPropagation.enabled", "true")
     spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
     try:
-        return _large_small_star_loop(sym, max_iter, checkpoint)
+        return _large_small_star_loop(sym, max_iter)
     finally:
         spark.conf.set("spark.sql.constraintPropagation.enabled", old_cp)
 
 
-def _large_small_star_loop(sym: DataFrame, max_iter: int, checkpoint: bool) -> DataFrame:
+def _large_small_star_loop(sym: DataFrame, max_iter: int) -> DataFrame:
     edges = sym  # symmetric to start; rounds keep a directed (big→small) set
     prev_checksum = None
     converged = False
@@ -355,9 +241,12 @@ def _large_small_star_loop(sym: DataFrame, max_iter: int, checkpoint: bool) -> D
             .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
         )
         small_self = smins.select(F.col("node").alias("src"), F.col("m").alias("dst"))
-        edges = small_nbrs.union(small_self).filter(F.col("src") != F.col("dst")).distinct()
-        if checkpoint:
-            edges = edges.localCheckpoint()
+        edges = (
+            small_nbrs.union(small_self)
+            .filter(F.col("src") != F.col("dst"))
+            .distinct()
+            .localCheckpoint()
+        )
         checksum = edges.agg(
             F.count(F.lit(1)).alias("n"),
             # decimal sum: long would overflow under ANSI arithmetic
@@ -386,9 +275,7 @@ def _large_small_star_loop(sym: DataFrame, max_iter: int, checkpoint: bool) -> D
     ).distinct()
 
 
-def assign_components(
-    triples: DataFrame, labels: DataFrame, broadcast_max_rows: int | None = None
-) -> DataFrame:
+def assign_components(triples: DataFrame, labels: DataFrame) -> DataFrame:
     """Map each subj to its component id; singletons keep subj as component.
 
     Round 6: the label table is two narrow string columns with one row per
@@ -401,12 +288,8 @@ def assign_components(
     cheap — the driver-CC path returns a local Arrow table, and the star
     path's labels derive from checkpointed edges.
     """
-    if broadcast_max_rows is None:
-        from .linking import LINK_BROADCAST_MAX_ROWS
-
-        broadcast_max_rows = LINK_BROADCAST_MAX_ROWS
     lab = labels.select(F.col("node").alias("subj"), "component")
-    if broadcast_max_rows > 0 and labels.count() <= broadcast_max_rows:
+    if LINK_BROADCAST_MAX_ROWS > 0 and labels.count() <= LINK_BROADCAST_MAX_ROWS:
         lab = F.broadcast(lab)
     return triples.join(lab, "subj", "left").withColumn(
         "component", F.coalesce("component", "subj")

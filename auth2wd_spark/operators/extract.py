@@ -45,7 +45,7 @@ def route(pages: DataFrame) -> DataFrame:
     return routed.withColumn("record_id", id_expr)
 
 
-def latest_snapshot(routed: DataFrame, probe_duplicates: bool = True) -> DataFrame:
+def latest_snapshot(routed: DataFrame) -> DataFrame:
     """One row per (source, record_id): the latest crawl snapshot wins.
 
     The fold itself is a max_by hash aggregation (partial map-side
@@ -55,16 +55,15 @@ def latest_snapshot(routed: DataFrame, probe_duplicates: bool = True) -> DataFra
     already unique — common for curated snapshots — the payload shuffle is
     skipped entirely. Re-crawled corpora pay it once, as they must.
     """
-    if probe_duplicates:
-        dup = (
-            routed.groupBy("source", "record_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > 1)
-            .limit(1)
-            .count()
-        )
-        if dup == 0:
-            return routed.select("source", "record_id", "url", "text", "lang", "warc_ts")
+    dup = (
+        routed.groupBy("source", "record_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") > 1)
+        .limit(1)
+        .count()
+    )
+    if dup == 0:
+        return routed.select("source", "record_id", "url", "text", "lang", "warc_ts")
     return (
         routed.groupBy("source", "record_id")
         .agg(
@@ -180,7 +179,7 @@ def _record_rows(
 
 
 def extract(records: DataFrame) -> DataFrame:
-    """records (source, record_id, url, text[, extra_text]) → RAW triples.
+    """records (source, record_id, url, text, extra_text) → RAW triples.
 
     Round 6: ``mapInArrow`` instead of ``mapInPandas`` — the parse emits
     ~10 rows × 21 columns per page, and the pandas path paid a
@@ -191,8 +190,6 @@ def extract(records: DataFrame) -> DataFrame:
     via two-sided exceptAll). The parse kernel (_record_rows) is
     unchanged.
     """
-    if "extra_text" not in records.columns:
-        records = records.withColumn("extra_text", F.lit(None).cast("string"))
     cols = ["source", "record_id", "url", "text", "extra_text"]
 
     def parse_batches(batches):

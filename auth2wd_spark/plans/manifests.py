@@ -165,7 +165,7 @@ def run_resumable(
 
     # one materialization feeds all six table writes below — lazy
     # with_comp would re-execute the triples × labels join per write
-    # (3.1× slower at bench cardinalities, BENCH/merge_withcomp_ab.py)
+    # (3.1× slower at bench cardinalities, BENCH/merge_withcomp_ab_result.txt)
     with_comp = assign_components(triples, labels).localCheckpoint()
     tables = merge_component(with_comp, ref_cap=config.ref_cap)
     out = {}

@@ -73,12 +73,19 @@ def release_all_cached(spark: SparkSession) -> None:
         pass
 
 
-def build_session(
-    app_name: str = "auth2wd-spark",
-    cpus: int | str | None = None,
-    shuffle_partitions: int | None = None,
-) -> SparkSession:
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+def host_defaults() -> tuple[int, str]:
+    """(cores, driver memory) sized to this host: the cores this process
+    may run on, and half of physical RAM for the driver JVM — a local-mode
+    driver is the whole cluster, and the Python workers and the OS need
+    the rest."""
+    cores = len(os.sched_getaffinity(0))
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return cores, f"{ram_mb // 2}m"
+
+
+def build_session(app_name: str = "auth2wd-spark", cpus: int | str | None = None) -> SparkSession:
+    default_cpus, default_memory = host_defaults()
+    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or default_cpus
     local_dir = os.environ.get("SPARK_LOCAL_DIRS")
     if local_dir is None and os.path.isdir("/dev/shm"):
         # RAM-backed shuffle/spill: local-mode shuffles go through
@@ -90,15 +97,15 @@ def build_session(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.local.dir", local_dir or "/tmp")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or max(int(cpus) * 2, 8)))
+        .config("spark.sql.shuffle.partitions", str(max(int(cpus) * 2, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # bench runs flip SPARK_GRAFT_UI=1: the live UI REST API is how
-        # per-phase shuffle read/write bytes reach BENCH/bench_full.json
+        # SPARK_GRAFT_UI=1 serves the live UI REST API, which a traced
+        # benchmark run reads per job group; off otherwise
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "0") == "1" and "true" or "false")
         .config("spark.ui.retainedStages", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or default_memory)
     )
     spark = builder.getOrCreate()
     ship_package(spark)

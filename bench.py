@@ -365,9 +365,6 @@ def clean_stop(spark) -> None:
 
 def main() -> None:
     sf = _sf_from_dir(SF_DIR)
-    # live UI feeds per-phase shuffle-byte deltas into the full record
-    # (round-5 link-phase instrumentation; harmless if port binding fails)
-    os.environ.setdefault("SPARK_GRAFT_UI", "1")
     spark = build_bench_session(CPUS)
     spark.sparkContext.setLogLevel("ERROR")
     # two reps per invocation, report the min: identical back-to-back runs

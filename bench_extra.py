@@ -98,7 +98,6 @@ def cmd_pipeline(_args: list[str]) -> None:
     import bench
 
     sf = bench._sf_from_dir(SF_DIR)
-    os.environ.setdefault("SPARK_GRAFT_UI", "1")
     spark = _session()
     for _ in range(int(os.environ.get("SPARK_GRAFT_PIPE_REPS", "2"))):
         rec = bench.run_pipeline_bench(spark, sf)

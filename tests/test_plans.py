@@ -186,22 +186,24 @@ def test_link_indexes_broadcast_under_gate(spark):
     tables are under LINK_BROADCAST_MAX_ROWS, every id→QID index join in
     link() must EXECUTE as a broadcast join — the choice may not be left
     to AQE, whose estimate-driven strategy flipped to six sort-merge
-    shuffles of the full-width raw table in one environment. Also pins the
-    run_pipeline instrumentation that records the executed strategies."""
+    shuffles of the full-width raw table in one environment. With AQE the
+    final strategies exist only after execution, so the plan is read after
+    an action on link()'s own DataFrame."""
     from auth2wd_spark import schemas
     from auth2wd_spark.corpus.generate import build_corpus
-    from auth2wd_spark.plans.pipeline import PipelineConfig, run_pipeline
+    from auth2wd_spark.operators.extract import extract_pages
+    from auth2wd_spark.operators.linking import link
 
     corpus = build_corpus(n_persons=20, noise_pages=5)
     pages = spark.createDataFrame(corpus["pages"], schema=schemas.PAGES)
     id_to_qid = spark.createDataFrame(corpus["id_to_qid"], schema=schemas.ID_TO_QID)
     viaf_lookup = spark.createDataFrame(corpus["viaf_lookup"], schema=schemas.VIAF_LOOKUP)
     valid_gnd = spark.createDataFrame(corpus["valid_gnd_ids"], schema=schemas.VALID_GND_IDS)
-    tables = run_pipeline(pages, id_to_qid, viaf_lookup, valid_gnd, PipelineConfig())
-    strategies = tables["metrics"].get("link_join_strategies")
-    assert strategies is not None, tables["metrics"]
+    linked = link(extract_pages(pages), id_to_qid, viaf_lookup, valid_gnd)
+    assert linked.collect()
+    plan = linked._jdf.queryExecution().executedPlan().toString()
     # J1/J6/J3/J5 index joins + the J7 anti-join all broadcast; nothing
     # may shuffle the raw table: no sort-merge, no shuffled-hash
-    assert strategies.get("broadcast_hash", 0) >= 4, strategies
-    assert "sort_merge" not in strategies, strategies
-    assert "shuffled_hash" not in strategies, strategies
+    assert plan.count("BroadcastHashJoin") >= 4, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "ShuffledHashJoin" not in plan, plan
