@@ -289,7 +289,7 @@ def assign_components(triples: DataFrame, labels: DataFrame) -> DataFrame:
     path's labels derive from checkpointed edges.
     """
     lab = labels.select(F.col("node").alias("subj"), "component")
-    if LINK_BROADCAST_MAX_ROWS > 0 and labels.count() <= LINK_BROADCAST_MAX_ROWS:
+    if labels.count() <= LINK_BROADCAST_MAX_ROWS:
         lab = F.broadcast(lab)
     return triples.join(lab, "subj", "left").withColumn(
         "component", F.coalesce("component", "subj")

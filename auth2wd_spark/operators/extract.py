@@ -217,7 +217,7 @@ def extract(records: DataFrame) -> DataFrame:
     return records.select(*cols).mapInArrow(parse_batches, schema=RAW)
 
 
-def extract_pages(pages: DataFrame, materialize: bool = True) -> DataFrame:
+def extract_pages(pages: DataFrame) -> DataFrame:
     """Full pages → RAW chain: route → latest snapshot → pair → parse.
 
     The routed frame is persisted across its three consumers (duplicate
@@ -228,12 +228,9 @@ def extract_pages(pages: DataFrame, materialize: bool = True) -> DataFrame:
     from pyspark import StorageLevel
 
     routed = route(pages).persist(StorageLevel.MEMORY_AND_DISK)
-    raw = extract(attach_secondary_bodies(latest_snapshot(routed)))
-    if not materialize:
-        return raw
     # eager localCheckpoint: materializes once, truncates lineage, and
     # lets us RELEASE the route cache here — repeated pipeline runs must
     # not accumulate cached route copies (storage-memory leak → GC drag)
-    raw = raw.localCheckpoint()
+    raw = extract(attach_secondary_bodies(latest_snapshot(routed))).localCheckpoint()
     routed.unpersist()
     return raw

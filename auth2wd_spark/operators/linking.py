@@ -22,9 +22,10 @@ equi-join against a deterministic dimension table:
       (external_id.rs:139-158); ids absent from the table pass (the
       reference only knows invalidity by fetching the page).
 
-Dimension tables are broadcast when under the autoBroadcastJoinThreshold;
-at 100 TB the id→QID index outgrows broadcast — pre-bucket both sides on
-(property, id) and let AQE pick the strategy (see plans/pipeline.py).
+The id→QID- and VIAF-derived indexes are explicitly broadcast when their
+base table is at most LINK_BROADCAST_MAX_ROWS rows (see `link`); above
+that gate, as when the id→QID index outgrows broadcast at 100 TB, the
+joins are left to AQE's strategy choice and skew-join splitting.
 
 The reference caches lookup hits AND misses in-process
 (external_id.rs:14-23); distinct() on the candidate keys before the join
@@ -32,8 +33,6 @@ plus the join itself subsumes both caches (SURVEY §4).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, Window, functions as F
 
@@ -48,10 +47,9 @@ from ..properties import KEY2PROP, RESCUE_CLASSES
 # the gate the index is provably broadcast-sized (each index is a groupBy
 # REDUCTION of id_to_qid, so count(id_to_qid) bounds every index), above
 # it the joins fall back to AQE, which is the right call once the index
-# outgrows executor memory (the pre-bucketed join path covers 100 TB).
-# 4M rows ≈ 250 MB broadcast worst-case — comfortable on any executor
-# profile that can run this pipeline at all.
-LINK_BROADCAST_MAX_ROWS = int(os.environ.get("AUTH2WD_LINK_BC_MAX_ROWS", "4000000"))
+# outgrows executor memory. 4M rows ≈ 250 MB broadcast worst-case —
+# comfortable on any executor profile that can run this pipeline at all.
+LINK_BROADCAST_MAX_ROWS = 4_000_000
 
 
 def single_hit_index(id_to_qid: DataFrame) -> DataFrame:
@@ -178,26 +176,17 @@ def link(
     id_to_qid: DataFrame,
     viaf_lookup: DataFrame,
     valid_gnd_ids: DataFrame,
-    hint_broadcast: bool = False,
     label_retry: bool = False,
-    broadcast_max_rows: int | None = None,
+    broadcast: bool | None = None,
 ) -> DataFrame:
     """Resolve all candidate rows; returns the TRIPLES DataFrame
     (kinds: claim, prop_text, label, alias, description).
 
-    Join-strategy choice (round 5): the id→QID-derived indexes are
-    explicitly broadcast when a cheap `id_to_qid.count()` is at or under
-    `broadcast_max_rows`. `None` (the default) means the module default
-    LINK_BROADCAST_MAX_ROWS (env AUTH2WD_LINK_BC_MAX_ROWS, an integer);
-    pass the literal `0` to disable the gate and restore pure AQE-choice
-    — `None` does NOT disable it. Leaving the choice to AQE was measured-fine
-    locally but flipped to six sort-merge shuffles of the full-width raw
-    table in the round-4 driver environment (link 70.5 s vs 12.9 s on
-    identical code) — the gate makes the broadcast decision a function of
-    the data, not the environment. `hint_broadcast=True` forces broadcast
-    unconditionally. Above the gate the exchanges go to AQE, which is
-    correct once an index outgrows broadcast (pre-bucketed joins are the
-    100 TB path, see module docstring).
+    `broadcast` picks the join strategy of the id→QID- and VIAF-derived
+    indexes: `None` (the default) broadcasts each index whose base table
+    has at most LINK_BROADCAST_MAX_ROWS rows (one `count()` per base
+    table), `True` always broadcasts them, and `False` leaves the choice
+    to AQE.
 
     `label_retry` (default False = reference behavior) enables the J2
     label-disambiguation of multi-hit extids — a deviation from the
@@ -206,16 +195,12 @@ def link(
     spark = raw.sparkSession
     cols = raw.columns
 
-    if broadcast_max_rows is None:
-        broadcast_max_rows = LINK_BROADCAST_MAX_ROWS
-
     def _gated_hint(base: DataFrame):
         # every index is a groupBy reduction of its base dimension table,
         # so count(base) bounds the index size — one cheap narrow count
         # (metadata-only on parquet) buys a deterministic broadcast choice
-        if hint_broadcast or (broadcast_max_rows > 0 and base.count() <= broadcast_max_rows):
-            return F.broadcast
-        return lambda df: df
+        fits = base.count() <= LINK_BROADCAST_MAX_ROWS if broadcast is None else broadcast
+        return F.broadcast if fits else (lambda df: df)
 
     hint = _gated_hint(id_to_qid)
     idx = hint(single_hit_index(id_to_qid))

@@ -92,13 +92,12 @@ def write_outputs_iceberg(
 
 
 # ---------------------------------------------------------------------------
-# Parquet-directory fallback: the SAME declared layouts, executed without the
-# Iceberg runtime. days(warc_ts) becomes a warc_day=YYYY-MM-DD partition
-# directory (Spark prunes it via PartitionFilters); bucket(N, component)
-# becomes DSv1 parquet bucketing in the session catalog (bucketed scans feed
-# joins/aggs on `component` with no Exchange). This executes and tests the
-# partition specs in any environment; the DSv2 branch above swaps in when the
-# runtime jar is present.
+# Parquet-directory fallback for the pages table: days(warc_ts) becomes a
+# warc_day=YYYY-MM-DD partition directory (Spark prunes it via
+# PartitionFilters), so the pages layout executes and is tested in any
+# environment. Without the runtime the item tables are plain parquet
+# directories (plans/pipeline.write_outputs); the DSv2 branch above swaps
+# in when the runtime jar is present.
 # ---------------------------------------------------------------------------
 
 
@@ -131,38 +130,6 @@ def read_pages_partitioned(spark: SparkSession, path: str, since: str | None = N
     if since is not None:
         df = df.filter(F.col("warc_day") >= F.lit(since))
     return df
-
-
-def write_outputs_bucketed(
-    tables: dict[str, DataFrame],
-    namespace: str,
-    as_of: str = "2026-01-01",
-) -> None:
-    """Bucketed session-catalog fallback for `write_outputs_iceberg`, same
-    spec: claims bucket(64, component), the rest bucket(16, component).
-    Bucket metadata lives in the catalog, so downstream joins/aggregations
-    on `component` read pre-shuffled data (no Exchange in the plan)."""
-    from .pipeline import attach_retrieved_date
-
-    spark = tables["claims"].sparkSession
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {namespace}")
-    claims = attach_retrieved_date(tables["claims"], as_of)
-    (
-        claims.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(64, "component")
-        .sortBy("component")
-        .saveAsTable(f"{namespace}.claims")
-    )
-    for name in ("labels", "aliases", "descriptions", "prop_text", "members", "components"):
-        (
-            tables[name]
-            .write.mode("overwrite")
-            .format("parquet")
-            .bucketBy(16, "component")
-            .sortBy("component")
-            .saveAsTable(f"{namespace}.{name}")
-        )
 
 
 def write_pages(pages: DataFrame, dest: str, catalog: str = DEFAULT_CATALOG) -> None:

@@ -1,4 +1,4 @@
-"""Per-stage lineage manifests + resumable pipeline execution.
+"""Per-stage lineage manifests for ``run_pipeline(stage_dir=...)``.
 
 north_rule: "resumable from checkpoint with per-partition lineage +
 metrics". Every materialized stage writes, next to its parquet files,
@@ -7,7 +7,7 @@ a ``_MANIFEST.json`` recording:
   - per-file row counts and content hashes (order-insensitive xxhash64
     aggregate) — the per-partition lineage,
   - stage metrics (row count, wall seconds, rows/sec),
-  - the stage's input manifest hashes (upstream lineage).
+  - the names of the stages it reads (upstream lineage).
 
 ``materialize_stage`` is the resume point: if the stage directory already
 holds a manifest whose file inventory matches what's on disk, the stage is
@@ -21,25 +21,25 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 MANIFEST = "_MANIFEST.json"
+
+
+def content_hash(cols: list[str]) -> Column:
+    """Order-insensitive content hash: the sum of every row's xxhash64."""
+    return F.sum(F.xxhash64(*[F.col(c).cast("string") for c in cols]).cast("decimal(38,0)"))
 
 
 def _file_inventory(spark: SparkSession, path: str) -> list[dict]:
     """(file, rows, content_hash) per parquet file in `path`."""
     df = spark.read.parquet(path)
-    cols = df.columns
     per_file = (
         df.withColumn("_file", F.input_file_name())
         .groupBy("_file")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(
-                F.xxhash64(*[F.col(c).cast("string") for c in cols]).cast("decimal(38,0)")
-            ).alias("content_hash"),
-        )
+        .agg(F.count(F.lit(1)).alias("rows"), content_hash(df.columns).alias("content_hash"))
         .collect()
     )
     return sorted(
@@ -77,22 +77,23 @@ def stage_is_complete(spark: SparkSession, stage_dir: str) -> bool:
 
 
 def materialize_stage(
-    df: DataFrame,
+    spark: SparkSession,
+    build: Callable[[], DataFrame],
     stage_dir: str,
-    stage_name: str,
     inputs: list[str] | None = None,
 ) -> DataFrame:
-    """Write-or-resume one pipeline stage; returns the materialized frame."""
-    spark = df.sparkSession
+    """Write-or-resume one pipeline stage; returns the stage read back from
+    ``stage_dir``. ``build`` makes the stage's plan and is not called when
+    the stage is already complete."""
     if stage_is_complete(spark, stage_dir):
         return spark.read.parquet(stage_dir)
     t0 = time.perf_counter()
-    df.write.mode("overwrite").parquet(stage_dir)
+    build().write.mode("overwrite").parquet(stage_dir)
     elapsed = time.perf_counter() - t0
     files = _file_inventory(spark, stage_dir)
     n_rows = sum(f["rows"] for f in files)
     manifest = {
-        "stage": stage_name,
+        "stage": os.path.basename(stage_dir),
         "files": files,
         "metrics": {
             "rows": n_rows,
@@ -109,70 +110,3 @@ def materialize_stage(
 def read_manifest(stage_dir: str) -> dict:
     with open(_manifest_path(stage_dir), encoding="utf-8") as fh:
         return json.load(fh)
-
-
-def run_resumable(
-    pages: DataFrame,
-    id_to_qid: DataFrame,
-    viaf_lookup: DataFrame,
-    valid_gnd_ids: DataFrame,
-    out_dir: str,
-    config=None,
-) -> dict[str, DataFrame]:
-    """Checkpointed variant of plans.pipeline.run_pipeline: each stage
-    materializes to ``{out_dir}/{stage}`` with a manifest and resumes from
-    the last completed stage on rerun."""
-    from ..operators.cc import assign_components, build_edges, connected_components
-    from ..operators.extract import extract_pages
-    from ..operators.linking import link
-    from ..operators.merge import merge_component
-    from .pipeline import PipelineConfig
-
-    config = config or PipelineConfig()
-    spark = pages.sparkSession
-    from ..session import ship_package
-
-    ship_package(spark)
-
-    raw_dir = os.path.join(out_dir, "raw")
-    if stage_is_complete(spark, raw_dir):
-        raw = spark.read.parquet(raw_dir)
-    else:
-        # the parquet stage write is the materialization here
-        raw = materialize_stage(extract_pages(pages, materialize=False), raw_dir, "extract")
-
-    triples_dir = os.path.join(out_dir, "triples")
-    if stage_is_complete(spark, triples_dir):
-        triples = spark.read.parquet(triples_dir)
-    else:
-        triples = materialize_stage(
-            link(raw, id_to_qid, viaf_lookup, valid_gnd_ids, label_retry=config.label_retry),
-            triples_dir,
-            "link",
-            inputs=["raw"],
-        )
-
-    comp_dir = os.path.join(out_dir, "components")
-    if stage_is_complete(spark, comp_dir):
-        labels = spark.read.parquet(comp_dir)
-    else:
-        labels = materialize_stage(
-            connected_components(build_edges(triples), max_iter=config.cc_max_iter),
-            comp_dir,
-            "connected_components",
-            inputs=["triples"],
-        )
-
-    # one materialization feeds all six table writes below — lazy
-    # with_comp would re-execute the triples × labels join per write
-    # (3.1× slower at bench cardinalities, BENCH/merge_withcomp_ab_result.txt)
-    with_comp = assign_components(triples, labels).localCheckpoint()
-    tables = merge_component(with_comp, ref_cap=config.ref_cap)
-    out = {}
-    for name in ("claims", "labels", "aliases", "descriptions", "prop_text", "members"):
-        out[name] = materialize_stage(
-            tables[name], os.path.join(out_dir, name), name, inputs=["triples", "components"]
-        )
-    out["triples"] = triples
-    out["components"] = labels
-    return out

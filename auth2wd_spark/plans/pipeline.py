@@ -2,11 +2,17 @@
 
 pages → route → latest-snapshot → extract → link → CC → assign → merge → sink.
 
+`run_pipeline` is the only place that knows the stage order. Each stage
+boundary goes through `_stage`, which either keeps the stage in the
+session (localCheckpoint where a stage has several consumers) or, with
+`stage_dir`, writes it as a parquet stage with a lineage manifest that a
+rerun resumes from (plans/manifests.py).
+
 Scale posture (north_rule):
   - routing/filtering is JVM-side regex inside whole-stage codegen;
   - extraction is Arrow-batched mapInArrow, embarrassingly parallel;
-  - every linking join broadcasts a single-hit index (or pre-bucketed
-    join at index sizes beyond broadcast);
+  - every linking join broadcasts a single-hit index while its base
+    table is under the row gate, and is left to AQE above it;
   - CC is an Arrow-native driver union-find while the edge set fits the
     driver caps, and large-star/small-star rounds (each round
     checkpointed) past them;
@@ -20,16 +26,20 @@ Scale posture (north_rule):
 
 from __future__ import annotations
 
+import os
 import time
+from collections.abc import Callable
 from dataclasses import dataclass
+from functools import partial
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.cc import assign_components, build_edges, connected_components
 from ..operators.extract import extract_pages
 from ..operators.linking import link
 from ..operators.merge import merge_component
 from ..session import ship_package
+from .manifests import materialize_stage
 
 
 @dataclass
@@ -45,33 +55,69 @@ class PipelineConfig:
     label_retry: bool = False
 
 
+ITEM_TABLES = ("claims", "labels", "aliases", "descriptions", "prop_text", "members")
+
+
+def _stage(
+    spark: SparkSession,
+    stage_dir: str | None,
+    name: str,
+    build: Callable[[], DataFrame],
+    inputs: list[str] | None = None,
+    checkpoint: bool = False,
+) -> DataFrame:
+    """One stage boundary. Without ``stage_dir`` the stage stays in the
+    session: ``build()``, localCheckpointed when ``checkpoint``. With it,
+    the stage is written to (or resumed from) ``{stage_dir}/{name}`` with a
+    manifest, and ``build`` is not called for a completed stage."""
+    if stage_dir is None:
+        df = build()
+        return df.localCheckpoint() if checkpoint else df
+    return materialize_stage(spark, build, os.path.join(stage_dir, name), inputs)
+
+
 def run_pipeline(
     pages: DataFrame,
     id_to_qid: DataFrame,
     viaf_lookup: DataFrame,
     valid_gnd_ids: DataFrame,
     config: PipelineConfig | None = None,
+    stage_dir: str | None = None,
 ) -> dict[str, DataFrame]:
     """The six item tables plus ``triples``, ``components`` and
     ``metrics`` (wall seconds of the extract, link, CC and assign phases).
     Per-phase shuffle, jobs and skew come from outside the program:
-    ``kgbench/run.py --trace 1`` reads them per job group from the REST API."""
+    ``kgbench/run.py --trace 1`` reads them per job group from the REST API.
+
+    With ``stage_dir``, raw, triples, components and the six item tables
+    are parquet stages under it (see plans/manifests.py), and a rerun
+    resumes from the stages a previous run completed."""
     config = config or PipelineConfig()
-    ship_package(pages.sparkSession)
+    spark = pages.sparkSession
+    ship_package(spark)
+    stage = partial(_stage, spark, stage_dir)
 
     t0 = time.perf_counter()
-    raw = extract_pages(pages)  # checkpointed inside
+    # extract_pages localCheckpoints RAW and releases the route cache
+    raw = stage("raw", lambda: extract_pages(pages))
     t1 = time.perf_counter()
     # link() fans raw out into ~6 branches and every downstream action
     # replans the whole lineage — localCheckpoint both materializes (no
     # recompute per branch) and truncates the logical plan. link()'s
     # construction stays on the link clock: it runs the dimension count()
     # gates that pick broadcast joins.
-    triples = link(
-        raw, id_to_qid, viaf_lookup, valid_gnd_ids, label_retry=config.label_retry
-    ).localCheckpoint()
+    triples = stage(
+        "triples",
+        lambda: link(raw, id_to_qid, viaf_lookup, valid_gnd_ids, label_retry=config.label_retry),
+        inputs=["raw"],
+        checkpoint=True,
+    )
     t2 = time.perf_counter()
-    labels = connected_components(build_edges(triples), max_iter=config.cc_max_iter)
+    labels = stage(
+        "components",
+        lambda: connected_components(build_edges(triples), max_iter=config.cc_max_iter),
+        inputs=["triples"],
+    )
     t3 = time.perf_counter()
     with_comp = assign_components(triples, labels)
     if config.salt_partitions > 0:
@@ -81,14 +127,18 @@ def run_pipeline(
         # repartition.
         salt = F.pmod(F.xxhash64("subj", "ord"), F.lit(config.salt_partitions))
         with_comp = with_comp.repartition(F.col("component"), salt)
-    # materialize once: merge_component fans with_comp out to six tables,
-    # and each would re-execute the triples × labels join if it stayed
-    # lazy. With six consumers the checkpoint won at both measured scales
-    # (BENCH/merge_withcomp_ab_result.txt; ARCHITECTURE.md, Merge).
+    # materialize once in both modes: merge_component fans with_comp out to
+    # six tables, and each would re-execute the triples × labels join if it
+    # stayed lazy. With six consumers the checkpoint won at both measured
+    # scales (BENCH/merge_withcomp_ab_result.txt; ARCHITECTURE.md, Merge).
     with_comp = with_comp.localCheckpoint()
     t4 = time.perf_counter()
 
-    tables = merge_component(with_comp, ref_cap=config.ref_cap)
+    merged = merge_component(with_comp, ref_cap=config.ref_cap)
+    tables = {
+        name: stage(name, lambda: merged[name], inputs=["triples", "components"])
+        for name in ITEM_TABLES
+    }
     tables["triples"] = triples
     tables["components"] = labels
     tables["metrics"] = {

@@ -68,8 +68,7 @@ def start_triples_stream(
     # every micro-batch would add two identical Spark jobs per batch to
     # the hot path (review finding r5)
     force_bc = (
-        LINK_BROADCAST_MAX_ROWS > 0
-        and id_to_qid.count() <= LINK_BROADCAST_MAX_ROWS
+        id_to_qid.count() <= LINK_BROADCAST_MAX_ROWS
         and viaf_lookup.count() <= LINK_BROADCAST_MAX_ROWS
     )
 
@@ -78,14 +77,7 @@ def start_triples_stream(
             return
         raw = extract_pages(batch_df)  # checkpointed; route cache released
         try:
-            triples = link(
-                raw,
-                id_to_qid,
-                viaf_lookup,
-                valid_gnd_ids,
-                hint_broadcast=force_bc,
-                broadcast_max_rows=0,  # gate pre-decided above
-            )
+            triples = link(raw, id_to_qid, viaf_lookup, valid_gnd_ids, broadcast=force_bc)
             (
                 triples.withColumn("batch_id", F.lit(batch_id))
                 .write.mode("overwrite")

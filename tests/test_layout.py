@@ -1,9 +1,8 @@
-"""Parquet-directory fallback for the declared Iceberg layouts
+"""Parquet-directory fallback for the declared Iceberg pages layout
 (plans/iceberg.py): days(warc_ts) partitioning must PRUNE at planning
-time, and bucket(N, component) must feed component-keyed aggregation with
-no Exchange. These execute the same partition specs the DSv2 branch
-declares, so the layout logic is proven even while the Iceberg runtime
-jar is absent (tests/test_iceberg.py covers the gated DSv2 path itself).
+time. This executes the same partition spec the DSv2 branch declares, so
+the layout logic is proven even while the Iceberg runtime jar is absent
+(tests/test_iceberg.py covers the gated DSv2 path itself).
 """
 
 import contextlib
@@ -12,7 +11,6 @@ import os
 from datetime import datetime
 
 import pytest
-from pyspark.sql import Row
 
 from auth2wd_spark.plans import iceberg as icb
 
@@ -92,60 +90,3 @@ def test_pages_dispatcher_uses_parquet_fallback_offline(spark, tmp_path):
     path = str(tmp_path / "pages_dispatch")
     icb.write_pages(_pages(spark), path)
     assert icb.read_pages_partitioned(spark, path).count() == 12
-
-
-def test_outputs_bucketed_component_agg_no_exchange(spark, tmp_path):
-    claims = spark.createDataFrame(
-        [
-            Row(
-                component=i % 7,
-                prop="P31",
-                value=f"Q{i}",
-                references=[
-                    Row(stated_in="Q54919", src_prop="P214", src_id=str(i))
-                ],
-            )
-            for i in range(100)
-        ]
-    )
-    side = spark.createDataFrame(
-        [Row(component=i % 7, lang="en", value=f"name {i}") for i in range(50)]
-    )
-    tables = {
-        "claims": claims,
-        "labels": side,
-        "aliases": side,
-        "descriptions": side,
-        "prop_text": side,
-        "members": side,
-        "components": side,
-    }
-    ns = "t_layout_ns"
-    try:
-        icb.write_outputs_bucketed(tables, ns, as_of="2026-02-03")
-
-        stored = spark.table(f"{ns}.claims")
-        # sink-side reference expansion applied
-        assert stored.selectExpr("references[0].retrieved AS r").first()["r"] == "2026-02-03"
-
-        # bucket(64, component) metadata must satisfy the component-keyed
-        # aggregation clustering: no shuffle Exchange anywhere in the plan
-        agg = stored.groupBy("component").count()
-        assert agg.count() == 7
-        plan = _plan(agg)
-        assert "Exchange" not in plan
-
-        # same-bucket-count self-join on component: the merge hint keeps AQE
-        # from broadcasting the (tiny, test-scale) side, so the pin is on the
-        # 100 TB shape — a sort-merge join with NO shuffle exchange, both
-        # sides already clustered by their buckets
-        j = (
-            stored.alias("a")
-            .hint("merge")
-            .join(spark.table(f"{ns}.claims").alias("b").hint("merge"), "component")
-        )
-        jplan = _plan(j)
-        assert "Exchange hashpartitioning" not in jplan
-        assert "SortMergeJoin" in jplan
-    finally:
-        spark.sql(f"DROP DATABASE IF EXISTS {ns} CASCADE")
