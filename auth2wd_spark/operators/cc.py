@@ -15,8 +15,6 @@ reduce key — and AQE skew-join splitting covers the join side.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
 
 from ..properties import P_VIAF, SUPPORTED_PROPERTIES
@@ -49,21 +47,21 @@ def build_edges(triples: DataFrame) -> DataFrame:
     )
 
 
-LOCAL_CC_THRESHOLD = int(os.environ.get("AUTH2WD_CC_LOCAL_THRESHOLD", "32000000"))
+LOCAL_CC_THRESHOLD = 32_000_000
 # cap on the total src+dst string bytes the driver union-find may collect.
 # Sized from measurement, not folklore: the round-2 pandas path multiplied
 # key bytes ~4× in Python-object heap, which set the original 256 MiB cap;
 # the round-3 Arrow-native path holds keys as Arrow buffers and the
 # measured end-to-end working set is ~5× key bytes (448 MB of keys → 2.23 GB
 # Python-driver peak RSS, BENCH/cc_gate_ab_result.json — combine_chunks
-# copy + dictionary_encode + numpy code/rank arrays). At the 1 GiB default
+# copy + dictionary_encode + numpy code/rank arrays). At the 1 GiB cap
 # the driver peak is ~5 GB, fine for any cluster driver sized ≥16 GB. The
 # same A/B measured the crossover the gate encodes: at 9.05M edges / 448 MB
 # keys (OVER the old cap) driver-exact ran 23.3/48.8 s vs the star path's
 # 284.4/194.7 s on identical checksummed output — the old gate was forcing
 # a 4-12× slower plan at sandbox scale. Past the cap, edges genuinely
 # outgrow one machine and the distributed star rewrites are the only path.
-LOCAL_CC_BYTE_CAP = int(os.environ.get("AUTH2WD_CC_LOCAL_BYTE_CAP", str(1024 * 1024 * 1024)))
+LOCAL_CC_BYTE_CAP = 1024 * 1024 * 1024
 
 
 def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
@@ -156,8 +154,8 @@ def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
     import pyarrow.compute as pc
 
     tbl = edges.select("src", "dst").toArrow()
-    # large_string: 64-bit offsets, so a raised AUTH2WD_CC_LOCAL_BYTE_CAP
-    # (>2 GiB of keys) cannot overflow combine_chunks' int32 offset space
+    # large_string: 64-bit offsets, so a LOCAL_CC_BYTE_CAP raised past
+    # 2 GiB of keys cannot overflow combine_chunks' int32 offset space
     combined = (
         pa.chunked_array(tbl.column("src").chunks + tbl.column("dst").chunks)
         .cast(pa.large_string())

@@ -17,13 +17,16 @@ import json
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.extid import subj_key
+from ..functions.extid import do_not_use_external_url, subj_key
 from ..schemas import RAW
 from ..sources.registry import PARSERS, ROUTES
 
 
 def route(pages: DataFrame) -> DataFrame:
     """Tag each page with (source, record_id); unroutable pages drop out.
+
+    Only `url, warc_ts, text, lang` carry on: no later stage reads
+    `html`, so it stays out of the route persist in `extract_pages`.
 
     Two-step on purpose: the `source` CASE chain is the only expression
     that runs over every (mostly noise) page; id extraction keys off the
@@ -35,7 +38,11 @@ def route(pages: DataFrame) -> DataFrame:
     for source, pattern in reversed(ROUTES):
         cond = F.regexp_like(F.col("url"), F.lit(pattern))
         source_expr = F.when(cond, F.lit(source)).otherwise(source_expr)
-    routed = pages.withColumn("source", source_expr).filter(F.col("source").isNotNull())
+    routed = (
+        pages.select("url", "warc_ts", "text", "lang")
+        .withColumn("source", source_expr)
+        .filter(F.col("source").isNotNull())
+    )
 
     id_expr = F.lit(None).cast("string")
     for source, pattern in reversed(ROUTES):
@@ -94,8 +101,6 @@ def attach_secondary_bodies(records: DataFrame) -> DataFrame:
         "left",
     ).drop("x_record_id")
 
-
-from ..functions.extid import do_not_use_external_url
 
 # column order of the output tuples — must match RAW
 _RAW_NAMES = [f.name for f in RAW.fields]

@@ -34,9 +34,12 @@ plus the join itself subsumes both caches (SURVEY §4).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, functions as F
 
 from ..properties import KEY2PROP, RESCUE_CLASSES
+from ..schemas import TRIPLES
 
 # Row-count gate for forcing an explicit broadcast on the id→QID-derived
 # link indexes (round 5). AQE still broadcasts small dims on its own, but
@@ -119,55 +122,31 @@ def viaf_key_map(spark) -> DataFrame:
     return spark.createDataFrame(rows, "cand_property INT, source_key STRING")
 
 
-def _as_item_claim(df: DataFrame) -> DataFrame:
-    return df.select(
-        "subj",
-        F.lit("claim").alias("kind"),
-        "pred",
-        F.lit("item").alias("obj_type"),
-        F.col("qid").alias("obj_value"),
-        F.lit(None).cast("string").alias("obj_lang"),
-        F.lit(None).cast("int").alias("obj_precision"),
-        F.lit("normal").alias("rank"),
-        F.lit("").alias("qualifiers"),
-        "has_ref",
-        F.lit(False).alias("needs_gnd_check"),
-        F.lit(None).cast("string").alias("cand_kind"),
-        F.lit(None).cast("int").alias("cand_property"),
-        F.lit(None).cast("string").alias("cand_id"),
-        F.lit(None).cast("int").alias("fallback_property"),
-        F.lit(None).cast("string").alias("fallback_text"),
-        F.lit(None).cast("boolean").alias("rescue"),
-        "src_property",
-        "src_id",
-        "src_url",
-        "ord",
-    )
+def _as_triples(df: DataFrame, *keep: str, **values) -> DataFrame:
+    """Project `df` onto TRIPLES: the columns named in `keep` pass through,
+    `values` (Columns or Python literals) fill theirs, and every other
+    TRIPLES column is a typed null."""
+
+    def column(field):
+        if field.name in keep:
+            return F.col(field.name)
+        value = values.get(field.name)
+        value = value if isinstance(value, Column) else F.lit(value)
+        return value.cast(field.dataType).alias(field.name)
+
+    return df.select(*map(column, TRIPLES.fields))
 
 
-def _as_prop_text(df: DataFrame, rescue: bool) -> DataFrame:
-    return df.select(
-        "subj",
-        F.lit("prop_text").alias("kind"),
-        F.lit(None).cast("string").alias("pred"),
-        F.lit(None).cast("string").alias("obj_type"),
-        F.lit(None).cast("string").alias("obj_value"),
-        F.lit(None).cast("string").alias("obj_lang"),
-        F.lit(None).cast("int").alias("obj_precision"),
-        F.lit(None).cast("string").alias("rank"),
-        F.lit(None).cast("string").alias("qualifiers"),
-        F.lit(None).cast("boolean").alias("has_ref"),
-        F.lit(None).cast("boolean").alias("needs_gnd_check"),
-        F.lit(None).cast("string").alias("cand_kind"),
-        F.lit(None).cast("int").alias("cand_property"),
-        F.lit(None).cast("string").alias("cand_id"),
-        "fallback_property",
-        "fallback_text",
-        F.lit(rescue).alias("rescue"),
-        "src_property",
-        "src_id",
-        "src_url",
-        "ord",
+_PROVENANCE = ("subj", "src_property", "src_id", "src_url", "ord")
+
+
+def _claims(df: DataFrame, obj_type: str, obj_value: str) -> DataFrame:
+    """Resolved candidates and rescued prop_text → normal-rank claims
+    without qualifiers."""
+    return _as_triples(
+        df, *_PROVENANCE, "pred", "has_ref",
+        kind="claim", obj_type=obj_type, obj_value=F.col(obj_value),
+        rank="normal", qualifiers="",
     )
 
 
@@ -179,8 +158,11 @@ def link(
     label_retry: bool = False,
     broadcast: bool | None = None,
 ) -> DataFrame:
-    """Resolve all candidate rows; returns the TRIPLES DataFrame
-    (kinds: claim, prop_text, label, alias, description).
+    """Resolve all candidate rows of a RAW DataFrame; returns a TRIPLES
+    DataFrame (kinds: claim, prop_text, label, alias, description). It
+    carries none of the five columns only linking reads: the candidate
+    key (`cand_kind`, `cand_property`, `cand_id`), `needs_gnd_check` and
+    `rescue`.
 
     `broadcast` picks the join strategy of the id→QID- and VIAF-derived
     indexes: `None` (the default) broadcasts each index whose base table
@@ -193,7 +175,7 @@ def link(
     reference, which parks every J1 miss as prop_text (see
     label_extid_index docstring)."""
     spark = raw.sparkSession
-    cols = raw.columns
+    names = TRIPLES.fieldNames()
 
     def _gated_hint(base: DataFrame):
         # every index is a groupBy reduction of its base dimension table,
@@ -211,16 +193,15 @@ def link(
         .groupBy("cand_property", "id")
         .agg(F.min("viaf_id").alias("viaf_id"))
     )
-    gnd_invalid = F.broadcast(
-        valid_gnd_ids.filter(~F.col("valid")).select(F.col("gnd_id").alias("obj_value"))
-    )
+    gnd_invalid = F.broadcast(valid_gnd_ids.filter(~F.col("valid")).select("gnd_id"))
 
-    claims = raw.filter(F.col("kind") == "claim")
     # J7 — drop P227 sameAs claims whose GND id is known-invalid
-    checked = claims.filter(F.col("needs_gnd_check"))
-    unchecked = claims.filter(~F.col("needs_gnd_check"))
-    kept = checked.join(gnd_invalid, "obj_value", "left_anti")
-    claims_out = unchecked.unionByName(kept.select(*cols))
+    claims = raw.filter(F.col("kind") == "claim")
+    claims_out = claims.join(
+        gnd_invalid,
+        (claims["obj_value"] == gnd_invalid["gnd_id"]) & claims["needs_gnd_check"],
+        "left_anti",
+    ).select(*names)
 
     # J1 — extid candidates
     cand = raw.filter(F.col("kind") == "candidate")
@@ -230,29 +211,25 @@ def link(
         (extid_cand["cand_property"] == idx["property"]) & (extid_cand["cand_id"] == idx["id"]),
         "left",
     )
-    resolved = _as_item_claim(j1.filter(F.col("qid").isNotNull()))
+    branches = [claims_out, _claims(j1.filter(F.col("qid").isNotNull()), "item", "qid")]
 
     # J2 (extension, gated) — label-constrained retry for J1 misses that
     # carry a name; with label_retry=False (reference behavior) every J1
     # miss parks directly as prop_text
-    j1_missed = j1.filter(F.col("qid").isNull() & F.col("fallback_text").isNotNull()).drop(
+    missed = j1.filter(F.col("qid").isNull() & F.col("fallback_text").isNotNull()).drop(
         "qid", "property", "id"
     )
     if label_retry:
         lbl_idx = hint(label_extid_index(id_to_qid))
-        j2 = j1_missed.join(
+        j2 = missed.join(
             lbl_idx,
-            (j1_missed["cand_property"] == lbl_idx["property"])
-            & (j1_missed["cand_id"] == lbl_idx["id"])
-            & (j1_missed["fallback_text"] == lbl_idx["label_en"]),
+            (missed["cand_property"] == lbl_idx["property"])
+            & (missed["cand_id"] == lbl_idx["id"])
+            & (missed["fallback_text"] == lbl_idx["label_en"]),
             "left",
         )
-        j2_resolved = _as_item_claim(j2.filter(F.col("qid").isNotNull()))
+        branches.append(_claims(j2.filter(F.col("qid").isNotNull()), "item", "qid"))
         missed = j2.filter(F.col("qid").isNull())
-    else:
-        j2_resolved = None
-        missed = j1_missed
-    missed_pt = _as_prop_text(missed, rescue=True)
 
     # J6 — parent taxon (no fallback on miss)
     parent_cand = cand.filter(F.col("cand_kind") == "parent_taxon")
@@ -262,7 +239,7 @@ def link(
         & (parent_cand["cand_id"] == tax_idx["id"]),
         "inner",
     )
-    parent_claims = _as_item_claim(j6)
+    branches.append(_claims(j6, "item", "qid"))
 
     # J5 — VIAF inference → P214 external-id claim
     viaf_cand = cand.filter(F.col("cand_kind") == "viaf")
@@ -272,39 +249,18 @@ def link(
         & (viaf_cand["cand_id"] == viaf_idx["id"]),
         "inner",
     )
-    viaf_claims = j5.select(
-        "subj",
-        F.lit("claim").alias("kind"),
-        viaf_cand["pred"],
-        F.lit("extid").alias("obj_type"),
-        F.col("viaf_id").alias("obj_value"),
-        F.lit(None).cast("string").alias("obj_lang"),
-        F.lit(None).cast("int").alias("obj_precision"),
-        F.lit("normal").alias("rank"),
-        F.lit("").alias("qualifiers"),
-        viaf_cand["has_ref"],
-        F.lit(False).alias("needs_gnd_check"),
-        F.lit(None).cast("string").alias("cand_kind"),
-        F.lit(None).cast("int").alias("cand_property"),
-        F.lit(None).cast("string").alias("cand_id"),
-        F.lit(None).cast("int").alias("fallback_property"),
-        F.lit(None).cast("string").alias("fallback_text"),
-        F.lit(None).cast("boolean").alias("rescue"),
-        "src_property",
-        "src_id",
-        "src_url",
-        "ord",
-    )
+    branches.append(_claims(j5, "extid", "viaf_id"))
 
-    # J3 — typed rescue over ALL prop_text (original + J1 fallbacks)
-    prop_text = raw.filter(F.col("kind") == "prop_text").select(*cols).unionByName(
-        missed_pt.select(*cols)
+    # J3 — typed rescue over ALL prop_text: the parsed rows plus the J1/J2
+    # misses, which park rescuable with has_ref null (a rescue makes it true)
+    parked = _as_triples(missed, *_PROVENANCE, "fallback_property", "fallback_text", kind="prop_text")
+    prop_text = raw.filter(F.col("kind") == "prop_text").select(*names, "rescue").unionByName(
+        parked.withColumn("rescue", F.lit(True))
     )
     is_rescuable = F.coalesce(F.col("rescue"), F.lit(False)) & F.col(
         "fallback_property"
     ).isin(list(RESCUE_CLASSES.keys()))
     rescuable = prop_text.filter(is_rescuable)
-    not_rescuable = prop_text.filter(~is_rescuable)
     j3 = rescuable.join(
         resc_idx,
         (rescuable["fallback_property"] == resc_idx["rescue_property"])
@@ -314,20 +270,10 @@ def link(
     rescued = j3.filter(F.col("qid").isNotNull()).withColumn(
         "pred", F.concat(F.lit("P"), F.col("fallback_property").cast("string"))
     ).withColumn("has_ref", F.coalesce(F.col("has_ref"), F.lit(True)))
-    rescued_claims = _as_item_claim(rescued)
-    still_pt = j3.filter(F.col("qid").isNull()).select(*cols)
-
-    terms = raw.filter(F.col("kind").isin("label", "alias", "description"))
-
-    out = claims_out.select(*cols).unionByName(resolved.select(*cols))
-    if j2_resolved is not None:
-        out = out.unionByName(j2_resolved.select(*cols))
-    return (
-        out
-        .unionByName(parent_claims.select(*cols))
-        .unionByName(viaf_claims.select(*cols))
-        .unionByName(rescued_claims.select(*cols))
-        .unionByName(still_pt)
-        .unionByName(not_rescuable)
-        .unionByName(terms.select(*cols))
-    )
+    branches += [
+        _claims(rescued, "item", "qid"),
+        j3.filter(F.col("qid").isNull()).select(*names),
+        prop_text.filter(~is_rescuable).select(*names),
+        raw.filter(F.col("kind").isin("label", "alias", "description")).select(*names),
+    ]
+    return reduce(DataFrame.unionByName, branches)

@@ -50,8 +50,10 @@ RAW = T.StructType(
     ]
 )
 
-# linked triples (candidates resolved; kinds claim|prop_text|label|alias|description)
-TRIPLES = RAW  # same physical schema; candidates eliminated
+# linked triples (candidates resolved; kinds claim|prop_text|label|alias|description):
+# RAW in RAW's column order minus the five columns that only link() reads
+_LINK_ONLY = {"needs_gnd_check", "cand_kind", "cand_property", "cand_id", "rescue"}
+TRIPLES = T.StructType([f for f in RAW.fields if f.name not in _LINK_ONLY])
 
 # dimension tables (FIXTURES.md §2)
 ID_TO_QID = T.StructType(

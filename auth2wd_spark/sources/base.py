@@ -18,7 +18,7 @@ Claim model (plain dicts — rows of the extraction DataFrame):
     has_ref       statement carries the source reference (F14); suppressed
                   for VIAF & WorldCat (aggregators) and GND+P27
     needs_gnd_check  P227 sameAs claims pending the validity join (J7)
-    cand_kind     extid | rescue | viaf | parent_taxon
+    cand_kind     extid | viaf | parent_taxon
     cand_property / cand_id      lookup key for the linking join
     fallback_property / fallback_text  prop_text emitted on lookup miss
     ord           per-record emission order (determinism for first-wins)

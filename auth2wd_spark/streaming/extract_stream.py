@@ -48,7 +48,8 @@ def start_triples_stream(
     checkpoint_dir: str,
 ):
     """pages stream → linked triples written to `output_dir` (parquet,
-    partitioned by micro-batch id).
+    partitioned by micro-batch id): the 16 `schemas.TRIPLES` columns plus
+    the `batch_id` partition column.
 
     foreachBatch reuses the batch extract+link operators unchanged. The
     write is IDEMPOTENT per micro-batch: each batch dynamically overwrites

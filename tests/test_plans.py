@@ -62,40 +62,6 @@ def test_route_stays_in_codegen(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_bucketed_id_to_qid_join_avoids_shuffle(spark, tmp_path):
-    """The 100 TB join strategy for the id->QID index (linking.py
-    docstring): bucket BOTH sides on (property, id) so the sort-merge join
-    is co-located. Proof: with broadcast disabled, the self-join of the
-    bucketed table plans with NO Exchange."""
-    from auth2wd_spark import schemas
-
-    rows = [(214, str(i), f"Q{i}", f"L{i}", "Q5") for i in range(1000)]
-    df = spark.createDataFrame(rows, schema=schemas.ID_TO_QID)
-    table = "id2qid_bucketed_demo"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    (
-        df.write.bucketBy(8, "property", "id")
-        .sortBy("property", "id")
-        .option("path", str(tmp_path / "id2qid"))
-        .saveAsTable(table)
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        a = spark.table(table)
-        b = spark.table(table).withColumnRenamed("qid", "qid2").select(
-            "property", "id", "qid2"
-        )
-        joined = a.join(b, ["property", "id"])
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan  # bucketing co-locates both sides
-        assert joined.count() == 1000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
 def test_ivf_centroids_broadcast_no_cartesian(spark):
     """IVF assignment: the per-vector × centroid pairing must be a
     broadcast nested-loop of the tiny centroid table — never a
