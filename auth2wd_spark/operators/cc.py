@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..properties import P_VIAF, SUPPORTED_PROPERTIES
-from .linking import LINK_BROADCAST_MAX_ROWS
+from .linking import broadcast_hint
 
 EDGE_PROPERTIES = tuple(sorted(set(SUPPORTED_PROPERTIES) | {P_VIAF}))
 
@@ -277,18 +277,18 @@ def assign_components(triples: DataFrame, labels: DataFrame) -> DataFrame:
     """Map each subj to its component id; singletons keep subj as component.
 
     Round 6: the label table is two narrow string columns with one row per
-    clustered node — orders of magnitude smaller than the 21-column triples
+    clustered node — orders of magnitude smaller than the triples
     table, whose SMJ shuffle was the bulk of the assign phase (140 MB of
-    shuffle at the sf0.1 bench vs a ~60 MB broadcast). Same count-gated
-    explicit broadcast as linking.link(): at or under the gate the side is
-    provably broadcast-sized, above it the join falls back to AQE choice
-    (the 100 TB path, where labels outgrow executor memory). The count is
-    cheap — the driver-CC path returns a local Arrow table, and the star
-    path's labels derive from checkpointed edges.
+    shuffle at the sf0.1 bench vs a ~60 MB broadcast). The same byte gate
+    as linking.link() (`broadcast_hint`) decides the hint from the size of
+    `labels`: at or under the gate the side is broadcast, above it the join
+    falls back to AQE choice (the 100 TB path, where labels outgrow
+    executor memory). The driver-CC path returns a local Arrow table whose
+    optimizer estimate is exact, so the decision runs no Spark job (it ran
+    a `labels.count()` before). The star path's labels, derived from
+    checkpointed edges, have no usable estimate and are still counted once.
     """
-    lab = labels.select(F.col("node").alias("subj"), "component")
-    if labels.count() <= LINK_BROADCAST_MAX_ROWS:
-        lab = F.broadcast(lab)
+    lab = broadcast_hint(labels)(labels.select(F.col("node").alias("subj"), "component"))
     return triples.join(lab, "subj", "left").withColumn(
         "component", F.coalesce("component", "subj")
     )

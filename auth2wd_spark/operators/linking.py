@@ -5,7 +5,7 @@ equi-join against a deterministic dimension table:
 
   J1  (property, id) → QID, accepted ONLY on a single hit — the reference's
       totalhits==1 precision guard (/root/reference/src/external_id.rs:90-125)
-      becomes groupBy(property,id) + count==1 before the join.
+      becomes `_single_hit` in the groupBy that builds the index.
   J2  label-constrained retry for J1 misses carrying a name: single hit
       within (property, id, label). EXTENSION, gated default-OFF: the
       reference resolves extid candidates ONLY via the totalhits==1 guard —
@@ -16,24 +16,32 @@ equi-join against a deterministic dimension table:
   J3  typed rescue of parked prop_text (P1412/P131/P27) against per-class
       name→QID rows (external_importer.rs:727-758).
   J5  VIAF inference: (source_key, id) → viaf_id (viaf.rs:191-227).
-  J6  parent-taxon: (taxon property, parent id) restricted to P31=Q16521
-      (inaturalist.rs:82-91 etc.).
+  J6  parent-taxon: the same single-hit test over the rows with
+      P31=Q16521 (inaturalist.rs:82-91 etc.); J1 and J6 share one
+      (property, id) index.
   J7  GND validity: drop P227 sameAs claims marked invalid
       (external_id.rs:139-158); ids absent from the table pass (the
       reference only knows invalidity by fetching the page).
 
-The id→QID- and VIAF-derived indexes are explicitly broadcast when their
-base table is at most LINK_BROADCAST_MAX_ROWS rows (see `link`); above
-that gate, as when the id→QID index outgrows broadcast at 100 TB, the
-joins are left to AQE's strategy choice and skew-join splitting.
+`link` is one chain over RAW: J7's anti-join, one conditional left join
+per index (J1+J6, J5, then J2), one projection that turns each candidate
+into a claim, a parked prop_text or nothing, and J3's conditional left
+join with the projection that turns its hits into claims. Each index is
+built once and probed once, and nothing is unioned.
+
+An index is explicitly broadcast when the optimizer's size estimate of
+its base table is at most BROADCAST_MAX_BYTES (`broadcast_hint`, which
+runs no Spark job on a table with statistics); above that gate, as when
+the id→QID index outgrows broadcast at 100 TB, the joins are left to
+AQE's strategy choice and skew-join splitting.
 
 The reference caches lookup hits AND misses in-process
-(external_id.rs:14-23); distinct() on the candidate keys before the join
-plus the join itself subsumes both caches (SURVEY §4).
+(external_id.rs:14-23); the join itself subsumes both caches (SURVEY §4).
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -41,28 +49,60 @@ from pyspark.sql import Column, DataFrame, functions as F
 from ..properties import KEY2PROP, RESCUE_CLASSES
 from ..schemas import TRIPLES
 
-# Row-count gate for forcing an explicit broadcast on the id→QID-derived
-# link indexes (round 5). AQE still broadcasts small dims on its own, but
-# its estimate-driven choice flipped to sort-merge in one environment and
-# shuffled the 21-column raw table through six branches (BENCH_r04: link
-# 70.5 s driver vs 12.9 s local on identical code/corpus). A cheap count
-# on the base dimension table makes the choice deterministic: at or under
-# the gate the index is provably broadcast-sized (each index is a groupBy
-# REDUCTION of id_to_qid, so count(id_to_qid) bounds every index), above
-# it the joins fall back to AQE, which is the right call once the index
-# outgrows executor memory. 4M rows ≈ 250 MB broadcast worst-case —
-# comfortable on any executor profile that can run this pipeline at all.
-LINK_BROADCAST_MAX_ROWS = 4_000_000
+# Byte gate for forcing an explicit broadcast of a join's small side
+# (round 5). AQE still broadcasts small dims on its own, but its
+# estimate-driven choice flipped to sort-merge in one environment and
+# shuffled the raw table through six branches (BENCH_r04: link 70.5 s
+# driver vs 12.9 s local on identical code/corpus). The hint makes the
+# choice deterministic: each link index is a groupBy REDUCTION of its base
+# table, so the base's size bounds the index. Above the gate the joins
+# fall back to AQE, which is the right call once the side outgrows
+# executor memory. 256 MiB is about the worst case of the earlier 4M-row
+# gate.
+BROADCAST_MAX_BYTES = 256 << 20
+# Spark's size estimate for a table it has no statistics for
+# (spark.sql.defaultSizeInBytes); a union or join over one estimates more
+_NO_STATISTICS = 2**63 - 1
+
+
+def broadcast_hint(base: DataFrame) -> Callable[[DataFrame], DataFrame]:
+    """`F.broadcast` when `base` fits BROADCAST_MAX_BYTES, else the identity.
+
+    The size is the optimizer's estimate of `base`, which runs no Spark
+    job: the file size for parquet, the cached size for a materialized
+    persist, and exact for local tables such as `createDataFrame` of an
+    Arrow table. A table without statistics (`createDataFrame` of a Python
+    list, an RDD, or a union or join over one) is counted once instead,
+    and its rows are sized as Spark sizes a local table's."""
+    size = base._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if size >= _NO_STATISTICS:
+        size = base.count() * (8 + base._jdf.schema().defaultSize())
+    return F.broadcast if size <= BROADCAST_MAX_BYTES else (lambda df: df)
+
+
+def _single_hit(qid: Column) -> Column:
+    """Aggregate: the group's one non-null `qid`, or null when the group
+    holds none or several distinct ones."""
+    return F.when(F.min(qid) == F.max(qid), F.min(qid))
+
+
+def _id_index(id_to_qid: DataFrame) -> DataFrame:
+    """(property, id) → J1's single-hit `qid` and J6's single-hit
+    `taxon_qid` (the same test over P31=Q16521 rows); keys with neither
+    are left out."""
+    return (
+        id_to_qid.groupBy("property", "id")
+        .agg(
+            _single_hit(F.col("qid")).alias("qid"),
+            _single_hit(F.when(F.col("p31") == "Q16521", F.col("qid"))).alias("taxon_qid"),
+        )
+        .filter(F.col("qid").isNotNull() | F.col("taxon_qid").isNotNull())
+    )
 
 
 def single_hit_index(id_to_qid: DataFrame) -> DataFrame:
     """(property, id) pairs mapping to exactly one QID (J1 precision guard)."""
-    return (
-        id_to_qid.groupBy("property", "id")
-        .agg(F.countDistinct("qid").alias("n_hits"), F.min("qid").alias("qid"))
-        .filter(F.col("n_hits") == 1)
-        .drop("n_hits")
-    )
+    return _id_index(id_to_qid).filter(F.col("qid").isNotNull()).drop("taxon_qid")
 
 
 def label_extid_index(id_to_qid: DataFrame) -> DataFrame:
@@ -81,20 +121,8 @@ def label_extid_index(id_to_qid: DataFrame) -> DataFrame:
     return (
         id_to_qid.filter(F.col("label_en").isNotNull())
         .groupBy("property", "id", "label_en")
-        .agg(F.countDistinct("qid").alias("n_hits"), F.min("qid").alias("qid"))
-        .filter(F.col("n_hits") == 1)
-        .drop("n_hits")
-    )
-
-
-def taxon_index(id_to_qid: DataFrame) -> DataFrame:
-    """Single-hit index restricted to taxa (haswbstatement:P31=Q16521)."""
-    return (
-        id_to_qid.filter(F.col("p31") == "Q16521")
-        .groupBy("property", "id")
-        .agg(F.countDistinct("qid").alias("n_hits"), F.min("qid").alias("qid"))
-        .filter(F.col("n_hits") == 1)
-        .drop("n_hits")
+        .agg(_single_hit(F.col("qid")).alias("qid"))
+        .filter(F.col("qid").isNotNull())
     )
 
 
@@ -108,46 +136,62 @@ def rescue_index(id_to_qid: DataFrame, spark) -> DataFrame:
     ]
     classmap = spark.createDataFrame(class_rows, "rescue_property INT, p31 STRING")
     return (
-        id_to_qid.join(F.broadcast(classmap), "p31")
+        id_to_qid.filter(F.col("label_en").isNotNull())
+        .join(F.broadcast(classmap), "p31")
         .groupBy("rescue_property", "label_en")
-        .agg(F.countDistinct("qid").alias("n_hits"), F.min("qid").alias("qid"))
-        .filter((F.col("n_hits") == 1) & F.col("label_en").isNotNull())
-        .drop("n_hits")
+        .agg(_single_hit(F.col("qid")).alias("qid"))
+        .filter(F.col("qid").isNotNull())
     )
 
 
 def viaf_key_map(spark) -> DataFrame:
     """property → VIAF source key (KEY2PROP reversed, viaf.rs:168-173)."""
     rows = [(prop, key) for key, prop in KEY2PROP.items()]
-    return spark.createDataFrame(rows, "cand_property INT, source_key STRING")
+    return spark.createDataFrame(rows, "property INT, source_key STRING")
 
 
-def _as_triples(df: DataFrame, *keep: str, **values) -> DataFrame:
-    """Project `df` onto TRIPLES: the columns named in `keep` pass through,
-    `values` (Columns or Python literals) fill theirs, and every other
-    TRIPLES column is a typed null."""
+def _probe(df: DataFrame, index: DataFrame, when: Column, *on: tuple[str, str]) -> DataFrame:
+    """Conditional left join: the rows of `df` where `when` holds look up
+    `index` on each (df column, index column) pair in `on`. The index's
+    key columns are dropped, so only its value columns join `df`; they
+    are null on every other row and on misses."""
+    cond = reduce(lambda c, k: c & (df[k[0]] == index[k[1]]), on, when)
+    return df.join(index, cond, "left").drop(*(index[k] for _, k in on))
+
+
+# a candidate's key in the (property, id)-keyed indexes
+_BY_ID = (("cand_property", "property"), ("cand_id", "id"))
+
+
+def _as_triples(df: DataFrame, *cases, **extra: Column) -> DataFrame:
+    """Project `df` onto TRIPLES, plus the `extra` columns. Each case is
+    `(cond, keep, values)`: on the rows where `cond` holds, `values`
+    (Columns or Python literals) fill their columns, the other columns
+    named in `keep` pass through, and every other TRIPLES column is a typed
+    null. Rows that no case matches pass through unchanged; the cases must
+    be disjoint."""
 
     def column(field):
-        if field.name in keep:
-            return F.col(field.name)
-        value = values.get(field.name)
-        value = value if isinstance(value, Column) else F.lit(value)
-        return value.cast(field.dataType).alias(field.name)
+        out = F.col(field.name)
+        for cond, keep, values in cases:
+            if field.name in values or field.name not in keep:
+                value = values.get(field.name)
+                value = value if isinstance(value, Column) else F.lit(value)
+                out = F.when(cond, value.cast(field.dataType)).otherwise(out)
+        return out.alias(field.name)
 
-    return df.select(*map(column, TRIPLES.fields))
+    return df.select(*map(column, TRIPLES.fields), *(v.alias(k) for k, v in extra.items()))
 
 
 _PROVENANCE = ("subj", "src_property", "src_id", "src_url", "ord")
 
 
-def _claims(df: DataFrame, obj_type: str, obj_value: str) -> DataFrame:
-    """Resolved candidates and rescued prop_text → normal-rank claims
-    without qualifiers."""
-    return _as_triples(
-        df, *_PROVENANCE, "pred", "has_ref",
-        kind="claim", obj_type=obj_type, obj_value=F.col(obj_value),
-        rank="normal", qualifiers="",
-    )
+def _claim(cond: Column, obj_type: str, obj_value: Column, **values):
+    """The `_as_triples` case for resolved candidates and rescued
+    prop_text: normal-rank claims without qualifiers that keep their
+    provenance, `pred` and `has_ref` unless `values` replace them."""
+    claim = {"kind": "claim", "rank": "normal", "qualifiers": "", "obj_type": obj_type}
+    return cond, (*_PROVENANCE, "pred", "has_ref"), {**claim, "obj_value": obj_value, **values}
 
 
 def link(
@@ -156,124 +200,82 @@ def link(
     viaf_lookup: DataFrame,
     valid_gnd_ids: DataFrame,
     label_retry: bool = False,
-    broadcast: bool | None = None,
 ) -> DataFrame:
     """Resolve all candidate rows of a RAW DataFrame; returns a TRIPLES
     DataFrame (kinds: claim, prop_text, label, alias, description). It
     carries none of the five columns only linking reads: the candidate
     key (`cand_kind`, `cand_property`, `cand_id`), `needs_gnd_check` and
-    `rescue`.
-
-    `broadcast` picks the join strategy of the id→QID- and VIAF-derived
-    indexes: `None` (the default) broadcasts each index whose base table
-    has at most LINK_BROADCAST_MAX_ROWS rows (one `count()` per base
-    table), `True` always broadcasts them, and `False` leaves the choice
-    to AQE.
+    `rescue`. Building it runs no Spark job when the dimension tables have
+    statistics (see `broadcast_hint`).
 
     `label_retry` (default False = reference behavior) enables the J2
     label-disambiguation of multi-hit extids — a deviation from the
     reference, which parks every J1 miss as prop_text (see
     label_extid_index docstring)."""
     spark = raw.sparkSession
-    names = TRIPLES.fieldNames()
-
-    def _gated_hint(base: DataFrame):
-        # every index is a groupBy reduction of its base dimension table,
-        # so count(base) bounds the index size — one cheap narrow count
-        # (metadata-only on parquet) buys a deterministic broadcast choice
-        fits = base.count() <= LINK_BROADCAST_MAX_ROWS if broadcast is None else broadcast
-        return F.broadcast if fits else (lambda df: df)
-
-    hint = _gated_hint(id_to_qid)
-    idx = hint(single_hit_index(id_to_qid))
-    tax_idx = hint(taxon_index(id_to_qid))
-    resc_idx = hint(rescue_index(id_to_qid, spark))
-    viaf_idx = _gated_hint(viaf_lookup)(
-        viaf_lookup.join(F.broadcast(viaf_key_map(spark)), "source_key")
-        .groupBy("cand_property", "id")
-        .agg(F.min("viaf_id").alias("viaf_id"))
-    )
-    gnd_invalid = F.broadcast(valid_gnd_ids.filter(~F.col("valid")).select("gnd_id"))
+    cand_kind = F.col("cand_kind")
+    by_id = broadcast_hint(id_to_qid)
 
     # J7 — drop P227 sameAs claims whose GND id is known-invalid
-    claims = raw.filter(F.col("kind") == "claim")
-    claims_out = claims.join(
+    gnd_invalid = F.broadcast(valid_gnd_ids.filter(~F.col("valid")).select("gnd_id"))
+    df = raw.join(
         gnd_invalid,
-        (claims["obj_value"] == gnd_invalid["gnd_id"]) & claims["needs_gnd_check"],
+        (raw["obj_value"] == gnd_invalid["gnd_id"]) & raw["needs_gnd_check"],
         "left_anti",
-    ).select(*names)
-
-    # J1 — extid candidates
-    cand = raw.filter(F.col("kind") == "candidate")
-    extid_cand = cand.filter(F.col("cand_kind") == "extid")
-    j1 = extid_cand.join(
-        idx,
-        (extid_cand["cand_property"] == idx["property"]) & (extid_cand["cand_id"] == idx["id"]),
-        "left",
     )
-    branches = [claims_out, _claims(j1.filter(F.col("qid").isNotNull()), "item", "qid")]
+
+    # J1 + J6 — extid and parent_taxon candidates probe one index
+    df = _probe(df, by_id(_id_index(id_to_qid)), cand_kind.isin("extid", "parent_taxon"), *_BY_ID)
+    item = F.when(cand_kind == "parent_taxon", F.col("taxon_qid")).otherwise(F.col("qid"))
+
+    # J5 — VIAF inference → P214 external-id claim
+    viaf_idx = (
+        viaf_lookup.join(F.broadcast(viaf_key_map(spark)), "source_key")
+        .groupBy("property", "id")
+        .agg(F.min("viaf_id").alias("viaf_id"))
+    )
+    df = _probe(df, broadcast_hint(viaf_lookup)(viaf_idx), cand_kind == "viaf", *_BY_ID)
 
     # J2 (extension, gated) — label-constrained retry for J1 misses that
     # carry a name; with label_retry=False (reference behavior) every J1
     # miss parks directly as prop_text
-    missed = j1.filter(F.col("qid").isNull() & F.col("fallback_text").isNotNull()).drop(
-        "qid", "property", "id"
-    )
+    named_miss = (cand_kind == "extid") & F.col("qid").isNull() & F.col("fallback_text").isNotNull()
     if label_retry:
-        lbl_idx = hint(label_extid_index(id_to_qid))
-        j2 = missed.join(
-            lbl_idx,
-            (missed["cand_property"] == lbl_idx["property"])
-            & (missed["cand_id"] == lbl_idx["id"])
-            & (missed["fallback_text"] == lbl_idx["label_en"]),
-            "left",
-        )
-        branches.append(_claims(j2.filter(F.col("qid").isNotNull()), "item", "qid"))
-        missed = j2.filter(F.col("qid").isNull())
+        lbl_idx = label_extid_index(id_to_qid).withColumnRenamed("qid", "label_qid")
+        df = _probe(df, by_id(lbl_idx), named_miss, *_BY_ID, ("fallback_text", "label_en"))
+        item = F.coalesce(item, F.col("label_qid"))
+        named_miss = named_miss & F.col("label_qid").isNull()
 
-    # J6 — parent taxon (no fallback on miss)
-    parent_cand = cand.filter(F.col("cand_kind") == "parent_taxon")
-    j6 = parent_cand.join(
-        tax_idx,
-        (parent_cand["cand_property"] == tax_idx["property"])
-        & (parent_cand["cand_id"] == tax_idx["id"]),
-        "inner",
+    # each candidate becomes a claim, a parked prop_text (rescuable, with
+    # has_ref null, so a J3 rescue makes it true) or nothing
+    is_cand = F.col("kind") == "candidate"
+    value = F.coalesce(item, F.col("viaf_id"))
+    claim = is_cand & value.isNotNull()
+    parked = is_cand & named_miss
+    obj_type = F.when(F.col("viaf_id").isNotNull(), "extid").otherwise("item")
+    df = _as_triples(
+        df.filter(~is_cand | claim | parked),
+        _claim(claim, obj_type, value),
+        (parked, (*_PROVENANCE, "fallback_property", "fallback_text"), {"kind": "prop_text"}),
+        rescue=F.when(parked, True).otherwise(F.col("rescue")),
     )
-    branches.append(_claims(j6, "item", "qid"))
 
-    # J5 — VIAF inference → P214 external-id claim
-    viaf_cand = cand.filter(F.col("cand_kind") == "viaf")
-    j5 = viaf_cand.join(
-        viaf_idx,
-        (viaf_cand["cand_property"] == viaf_idx["cand_property"])
-        & (viaf_cand["cand_id"] == viaf_idx["id"]),
-        "inner",
+    # J3 — typed rescue over all prop_text: the parsed rows and the parked
+    # J1/J2 misses
+    rescuable = (
+        (F.col("kind") == "prop_text")
+        & F.coalesce(F.col("rescue"), F.lit(False))
+        & F.col("fallback_property").isin(list(RESCUE_CLASSES))
     )
-    branches.append(_claims(j5, "extid", "viaf_id"))
-
-    # J3 — typed rescue over ALL prop_text: the parsed rows plus the J1/J2
-    # misses, which park rescuable with has_ref null (a rescue makes it true)
-    parked = _as_triples(missed, *_PROVENANCE, "fallback_property", "fallback_text", kind="prop_text")
-    prop_text = raw.filter(F.col("kind") == "prop_text").select(*names, "rescue").unionByName(
-        parked.withColumn("rescue", F.lit(True))
+    df = _probe(
+        df,
+        by_id(rescue_index(id_to_qid, spark)),
+        rescuable,
+        ("fallback_property", "rescue_property"),
+        ("fallback_text", "label_en"),
     )
-    is_rescuable = F.coalesce(F.col("rescue"), F.lit(False)) & F.col(
-        "fallback_property"
-    ).isin(list(RESCUE_CLASSES.keys()))
-    rescuable = prop_text.filter(is_rescuable)
-    j3 = rescuable.join(
-        resc_idx,
-        (rescuable["fallback_property"] == resc_idx["rescue_property"])
-        & (rescuable["fallback_text"] == resc_idx["label_en"]),
-        "left",
+    pred = F.concat(F.lit("P"), F.col("fallback_property").cast("string"))
+    has_ref = F.coalesce(F.col("has_ref"), F.lit(True))
+    return _as_triples(
+        df, _claim(F.col("qid").isNotNull(), "item", F.col("qid"), pred=pred, has_ref=has_ref)
     )
-    rescued = j3.filter(F.col("qid").isNotNull()).withColumn(
-        "pred", F.concat(F.lit("P"), F.col("fallback_property").cast("string"))
-    ).withColumn("has_ref", F.coalesce(F.col("has_ref"), F.lit(True)))
-    branches += [
-        _claims(rescued, "item", "qid"),
-        j3.filter(F.col("qid").isNull()).select(*names),
-        prop_text.filter(~is_rescuable).select(*names),
-        raw.filter(F.col("kind").isin("label", "alias", "description")).select(*names),
-    ]
-    return reduce(DataFrame.unionByName, branches)

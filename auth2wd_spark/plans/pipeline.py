@@ -11,8 +11,9 @@ rerun resumes from (plans/manifests.py).
 Scale posture (north_rule):
   - routing/filtering is JVM-side regex inside whole-stage codegen;
   - extraction is Arrow-batched mapInArrow, embarrassingly parallel;
-  - every linking join broadcasts a single-hit index while its base
-    table is under the row gate, and is left to AQE above it;
+  - link probes each index once in one chain of conditional joins, and
+    broadcasts it while the optimizer's size estimate of its base table
+    is under the byte gate; above it the join is left to AQE;
   - CC is an Arrow-native driver union-find while the edge set fits the
     driver caps, and large-star/small-star rounds (each round
     checkpointed) past them;
@@ -101,11 +102,9 @@ def run_pipeline(
     # extract_pages localCheckpoints RAW and releases the route cache
     raw = stage("raw", lambda: extract_pages(pages))
     t1 = time.perf_counter()
-    # link() fans raw out into ~6 branches and every downstream action
-    # replans the whole lineage — localCheckpoint both materializes (no
-    # recompute per branch) and truncates the logical plan. link()'s
-    # construction stays on the link clock: it runs the dimension count()
-    # gates that pick broadcast joins.
+    # CC and assign both read triples, and each action on a lazy triples
+    # frame would re-run link(); localCheckpoint materializes it once and
+    # truncates the logical plan.
     triples = stage(
         "triples",
         lambda: link(raw, id_to_qid, viaf_lookup, valid_gnd_ids, label_retry=config.label_retry),

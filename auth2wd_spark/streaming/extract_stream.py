@@ -3,7 +3,7 @@
 The reference is request/response + batch CLI (src/main.rs:362-382); this
 is the optional streaming extension (SURVEY §2.7): new page arrivals
 stream in, extraction + linking run per micro-batch (foreachBatch so the
-exact batch operators — including the multi-branch linking joins against
+exact batch operators — including the linking joins against
 static dimension tables — are reused verbatim), and triples append to a
 partitioned sink. Canonicalization (CC + merge) stays a periodic batch
 job over the accumulated triples, which is the right cadence for a
@@ -59,26 +59,17 @@ def start_triples_stream(
     triples on retry).
     """
     from ..operators.extract import extract_pages
-    from ..operators.linking import LINK_BROADCAST_MAX_ROWS, link
+    from ..operators.linking import link
     from ..session import ship_package
 
     ship_package(pages_stream.sparkSession)
-
-    # the dimension tables are static for the life of the stream, so the
-    # round-5 broadcast gate is decided ONCE here — re-counting inside
-    # every micro-batch would add two identical Spark jobs per batch to
-    # the hot path (review finding r5)
-    force_bc = (
-        id_to_qid.count() <= LINK_BROADCAST_MAX_ROWS
-        and viaf_lookup.count() <= LINK_BROADCAST_MAX_ROWS
-    )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         raw = extract_pages(batch_df)  # checkpointed; route cache released
         try:
-            triples = link(raw, id_to_qid, viaf_lookup, valid_gnd_ids, broadcast=force_bc)
+            triples = link(raw, id_to_qid, viaf_lookup, valid_gnd_ids)
             (
                 triples.withColumn("batch_id", F.lit(batch_id))
                 .write.mode("overwrite")

@@ -149,7 +149,7 @@ def test_kmeans_training_plan_shape(spark):
 
 def test_link_indexes_broadcast_under_gate(spark):
     """Round-5 robustness pin (BENCH_r04 post-mortem): when the dimension
-    tables are under LINK_BROADCAST_MAX_ROWS, every id→QID index join in
+    tables are under BROADCAST_MAX_BYTES, every id→QID index join in
     link() must EXECUTE as a broadcast join — the choice may not be left
     to AQE, whose estimate-driven strategy flipped to six sort-merge
     shuffles of the full-width raw table in one environment. With AQE the
