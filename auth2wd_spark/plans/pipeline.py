@@ -8,6 +8,13 @@ session (localCheckpoint where a stage has several consumers) or, with
 `stage_dir`, writes it as a parquet stage with a lineage manifest that a
 rerun resumes from (plans/manifests.py).
 
+Sibling writes run as concurrent Spark jobs: `write_outputs` writes its
+seven parquet tables, and a staged run its six item stages, each from its
+own thread (`_in_threads`). Each thread inherits the caller's job group
+and local properties, so the writes stay in the caller's job group and a
+`cancelAllJobs` or `cancelJobGroup` reaches them. Every write is waited
+for; then the first failure, in table order, is raised.
+
 Scale posture (north_rule):
   - routing/filtering is JVM-side regex inside whole-stage codegen;
   - extraction is Arrow-batched mapInArrow, embarrassingly parallel;
@@ -30,10 +37,13 @@ from __future__ import annotations
 import os
 import time
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from functools import partial
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..operators.cc import assign_components, build_edges, connected_components
 from ..operators.extract import extract_pages
@@ -75,6 +85,33 @@ def _stage(
         df = build()
         return df.localCheckpoint() if checkpoint else df
     return materialize_stage(spark, build, os.path.join(stage_dir, name), inputs)
+
+
+T = TypeVar("T")
+
+
+def _in_threads(spark: SparkSession, calls: dict[str, Callable[[], T]]) -> dict[str, T]:
+    """Run each call in its own thread, so that the Spark jobs they start
+    run concurrently, and return their results by name.
+
+    Each call is wrapped with ``inheritable_thread_target`` on the caller's
+    thread: the wrap clones the caller's local properties (job group,
+    scheduler pool) and job tags, and the thread installs them before the
+    call. One wrap per call, so no two threads share the properties object
+    that a SQL execution writes its id into. The pool has one thread per
+    call; under the default FIFO scheduler the first call's stages keep
+    priority. Every call is waited for; then the first exception, in
+    ``calls`` order, is raised."""
+    targets = {}
+    for name, call in calls.items():
+        wrap = inheritable_thread_target(spark)
+        # with PYSPARK_PIN_THREAD=false the session comes back unchanged:
+        # threads then share the JVM's state and there is nothing to carry
+        targets[name] = wrap(call) if callable(wrap) else call
+    with ThreadPoolExecutor(max_workers=len(targets)) as pool:
+        futures = {name: pool.submit(target) for name, target in targets.items()}
+    # the pool has waited for every call; result() raises a call's exception
+    return {name: future.result() for name, future in futures.items()}
 
 
 def run_pipeline(
@@ -134,10 +171,18 @@ def run_pipeline(
     t4 = time.perf_counter()
 
     merged = merge_component(with_comp, ref_cap=config.ref_cap)
-    tables = {
-        name: stage(name, lambda: merged[name], inputs=["triples", "components"])
+    # ``partial`` binds each name now: a lambda over the loop variable,
+    # called later from a thread, would read the last name
+    item_stages = {
+        name: partial(stage, name, partial(merged.get, name), inputs=["triples", "components"])
         for name in ITEM_TABLES
     }
+    # in session the item tables stay lazy until write_outputs; staged,
+    # each is a parquet write, and they run concurrently as the sink's do
+    if stage_dir is None:
+        tables = {name: call() for name, call in item_stages.items()}
+    else:
+        tables = _in_threads(spark, item_stages)
     tables["triples"] = triples
     tables["components"] = labels
     tables["metrics"] = {
@@ -165,13 +210,20 @@ def attach_retrieved_date(claims: DataFrame, as_of: str) -> DataFrame:
 
 
 def write_outputs(tables: dict[str, DataFrame], out_dir: str, as_of: str = "2026-01-01") -> bool:
-    """Partitioned item-table sink.
+    """Item-table sink: claims (with ``as_of`` as the P813 retrieved date),
+    labels, aliases, descriptions, prop_text, members and components.
+
+    Without the Iceberg runtime the seven tables are written as plain
+    parquet directories under ``out_dir`` (not partitioned), each from its
+    own thread so that their jobs run concurrently. The threads inherit
+    the caller's job group; every write is waited for, and then the first
+    failure, in table order, is raised. Returns False.
 
     When the Iceberg runtime is on the classpath, writes REAL Iceberg
     tables (hadoop catalog at `out_dir`, bucket-partitioned on component —
-    see plans/iceberg.py) and returns True; otherwise falls back to the
-    plain parquet-directory layout and returns False so callers can surface
-    which path ran."""
+    see plans/iceberg.py), one after another, and returns True. That branch
+    stays sequential because it cannot be run where no Iceberg runtime jar
+    is installed. The return value lets callers surface which path ran."""
     from .iceberg import configure_catalog, iceberg_available, write_outputs_iceberg
 
     spark = tables["claims"].sparkSession
@@ -180,8 +232,11 @@ def write_outputs(tables: dict[str, DataFrame], out_dir: str, as_of: str = "2026
         write_outputs_iceberg(tables, namespace="kg", catalog=catalog, as_of=as_of)
         return True
 
-    claims = attach_retrieved_date(tables["claims"], as_of)
-    claims.write.mode("overwrite").parquet(f"{out_dir}/claims")
-    for name in ("labels", "aliases", "descriptions", "prop_text", "members", "components"):
-        tables[name].write.mode("overwrite").parquet(f"{out_dir}/{name}")
+    # claims first: under FIFO scheduling its stages keep priority
+    out = {name: tables[name] for name in (*ITEM_TABLES, "components")}
+    out["claims"] = attach_retrieved_date(out["claims"], as_of)
+    _in_threads(
+        spark,
+        {name: partial(df.write.mode("overwrite").parquet, f"{out_dir}/{name}") for name, df in out.items()},
+    )
     return False

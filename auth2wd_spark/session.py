@@ -106,6 +106,13 @@ def build_session(app_name: str = "auth2wd-spark", cpus: int | str | None = None
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "0") == "1" and "true" or "false")
         .config("spark.ui.retainedStages", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or default_memory)
+        # PySpark wraps every F.* and Column call to record its Python call
+        # site for error messages, at about five py4j round trips per call;
+        # off, building link()'s and merge_component()'s plans makes under
+        # half as many py4j calls. PySpark reads this flag once per
+        # process, the first time a wrapped call runs, so it must be set
+        # here, when the session is built, and not on a running session.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     ship_package(spark)

@@ -12,6 +12,8 @@ before JVM launch, which the shared test session forbids)."""
 import os
 import subprocess
 import sys
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -200,9 +202,7 @@ def test_iceberg_roundtrip(spark, tmp_path):
     assert back.count() == 1
 
 
-def test_write_outputs_reports_fallback(spark, tmp_path):
-    """write_outputs returns False (parquet fallback) or True (Iceberg) —
-    and the claimed path actually produced readable output."""
+def _sink_tables(spark) -> dict:
     tables = {
         name: spark.createDataFrame(
             [("c1", "x")], "component STRING, v STRING"
@@ -214,6 +214,13 @@ def test_write_outputs_reports_fallback(spark, tmp_path):
         "component STRING, pred STRING, obj_value STRING, "
         "references ARRAY<STRUCT<stated_in STRING, src_prop STRING, src_id STRING>>",
     )
+    return tables
+
+
+def test_write_outputs_reports_fallback(spark, tmp_path):
+    """write_outputs returns False (parquet fallback) or True (Iceberg) —
+    and the claimed path actually produced readable output."""
+    tables = _sink_tables(spark)
     out = str(tmp_path / "out")
     used_iceberg = write_outputs(tables, out)
     assert used_iceberg == ice.iceberg_available(spark)
@@ -222,3 +229,58 @@ def test_write_outputs_reports_fallback(spark, tmp_path):
     else:
         assert spark.read.parquet(f"{out}/claims").count() == 1
         assert os.path.isdir(f"{out}/members")
+
+
+def _marker_job(spark, group: str) -> int:
+    """Run one job in ``group`` and return its id, once the status tracker
+    has seen it (the tracker is fed asynchronously, in job order, so every
+    earlier job is in it too)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "marker")
+    sc.parallelize([1], 1).count()
+    deadline = time.monotonic() + 60
+    while not (ids := sc.statusTracker().getJobIdsForGroup(group)):
+        assert time.monotonic() < deadline, f"marker job of {group!r} never reached the tracker"
+        time.sleep(0.05)
+    return max(ids)
+
+
+def test_write_outputs_jobs_stay_in_callers_job_group(spark, tmp_path):
+    """The sink's writes run from worker threads, and every job they start
+    belongs to the caller's job group — so a traced sink is charged its
+    jobs, and cancelling the group reaches them."""
+    sc = spark.sparkContext
+    tables = _sink_tables(spark)
+    try:
+        first = _marker_job(spark, "sink-before")
+        sc.setJobGroup("sink-under-test", "write_outputs")
+        write_outputs(tables, str(tmp_path / "out"))
+        last = _marker_job(spark, "sink-after")
+    finally:
+        sc._jsc.clearJobGroup()
+    in_group = set(sc.statusTracker().getJobIdsForGroup("sink-under-test"))
+    assert len(in_group) >= 7
+    # job ids are sequential: every job between the markers is the sink's
+    assert in_group == set(range(first + 1, last))
+
+
+def test_write_outputs_waits_for_all_writes_then_raises(spark, tmp_path):
+    """A failing table write is re-raised after every other table is
+    written, and no worker thread outlives the call."""
+    if ice.iceberg_available(spark):
+        pytest.skip("the Iceberg branch writes sequentially")
+
+    def fail(v):
+        raise ValueError("members write failed on purpose")
+
+    tables = _sink_tables(spark)
+    tables["members"] = tables["members"].select(
+        "component", F.udf(fail, "string")("v").alias("v")
+    )
+    out = str(tmp_path / "out")
+    threads_before = threading.active_count()
+    with pytest.raises(Exception, match="members write failed on purpose"):
+        write_outputs(tables, out)
+    assert threading.active_count() == threads_before
+    for name in ("claims", "labels", "aliases", "descriptions", "prop_text", "components"):
+        assert os.path.exists(f"{out}/{name}/_SUCCESS"), name
