@@ -15,12 +15,14 @@ reduce key — and AQE skew-join splitting covers the join side.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from ..properties import P_VIAF, SUPPORTED_PROPERTIES
 from .linking import broadcast_hint
 
 EDGE_PROPERTIES = tuple(sorted(set(SUPPORTED_PROPERTIES) | {P_VIAF}))
+# the property number of a `P{n}` predicate, as SQL
+_PROP_NUM = r"CAST(regexp_extract(pred, r'^P(\d+)$', 1) AS INT)"
 
 
 def build_edges(triples: DataFrame) -> DataFrame:
@@ -30,19 +32,12 @@ def build_edges(triples: DataFrame) -> DataFrame:
     parser-availability filter (combinator.rs:53-57): only properties with
     a registered parser (plus P214) can link records into one cluster.
     """
-    prop_num = F.regexp_extract("pred", r"^P(\d+)$", 1).cast("int")
     return (
         triples.filter(
-            (F.col("kind") == "claim")
-            & (F.col("obj_type") == "extid")
-            & (F.col("rank") != "deprecated")
+            "kind = 'claim' AND obj_type = 'extid' AND rank != 'deprecated'"
+            f" AND {_PROP_NUM} IN ({', '.join(map(str, EDGE_PROPERTIES))})"
         )
-        .withColumn("prop_num", prop_num)
-        .filter(F.col("prop_num").isin(list(EDGE_PROPERTIES)))
-        .select(
-            F.col("subj").alias("src"),
-            F.concat(F.lit("P"), F.col("prop_num").cast("string"), F.lit(":"), F.col("obj_value")).alias("dst"),
-        )
+        .selectExpr("subj AS src", f"concat('P', CAST({_PROP_NUM} AS STRING), ':', obj_value) AS dst")
         .distinct()
     )
 
@@ -83,15 +78,24 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
         are exactly what large-star splits across reducers.
     """
     spark = edges.sparkSession
-    proper = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    proper = proper.localCheckpoint()  # one materialization feeds both paths
-    stats = proper.agg(
-        F.count(F.lit(1)).alias("n"),
-        # octet_length, not length: the cap reasons about driver heap BYTES,
-        # and UTF-8 keys are up to 4 bytes per character
-        F.sum(F.octet_length("src") + F.octet_length("dst")).alias("key_bytes"),
-    ).collect()[0]
-    n_edges = stats["n"]
+    # the edge count and key bytes are observed on the checkpoint job that
+    # materializes `proper` (one materialization feeds both paths), so no
+    # separate job computes them
+    stats = Observation()
+    proper = (
+        edges.selectExpr("src", "dst")
+        .filter("src != dst")
+        .observe(
+            stats,
+            F.expr("count(1) AS n"),
+            # octet_length, not length: the cap reasons about driver heap
+            # BYTES, and UTF-8 keys are up to 4 bytes per character
+            F.expr("sum(octet_length(src) + octet_length(dst)) AS key_bytes"),
+        )
+        .localCheckpoint()
+    )
+    observed = stats.get
+    n_edges, key_bytes = observed["n"], observed["key_bytes"]
     if n_edges == 0:
         return spark.createDataFrame([], "node STRING, component STRING")
     # the driver path is gated by BYTES, not just edge count — 2M edges of
@@ -99,7 +103,7 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     # It consumes the DIRECTED edges as-is: the vectorized min-label sweep
     # applies minimum.at on both endpoint arrays, so symmetrization (and
     # the big distinct shuffle it costs) is only paid on the star path.
-    if n_edges <= LOCAL_CC_THRESHOLD and (stats["key_bytes"] or 0) <= LOCAL_CC_BYTE_CAP:
+    if n_edges <= LOCAL_CC_THRESHOLD and (key_bytes or 0) <= LOCAL_CC_BYTE_CAP:
         return _driver_union_find(spark, proper)
 
     sym = proper.union(
@@ -134,7 +138,8 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
 
 
 def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
-    """Exact driver-local components; deterministic min-string labels.
+    """Exact driver-local components of `edges` (exactly the columns src,
+    dst); deterministic min-string labels.
 
     Arrow-NATIVE end to end (round 3): `df.toArrow()` fetch and
     `createDataFrame(pa.Table)` return move the keys as Arrow buffers —
@@ -153,7 +158,7 @@ def _driver_union_find(spark, edges: DataFrame) -> DataFrame:
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    tbl = edges.select("src", "dst").toArrow()
+    tbl = edges.toArrow()
     # large_string: 64-bit offsets, so a LOCAL_CC_BYTE_CAP raised past
     # 2 GiB of keys cannot overflow combine_chunks' int32 offset space
     combined = (
@@ -288,7 +293,7 @@ def assign_components(triples: DataFrame, labels: DataFrame) -> DataFrame:
     a `labels.count()` before). The star path's labels, derived from
     checkpointed edges, have no usable estimate and are still counted once.
     """
-    lab = broadcast_hint(labels)(labels.select(F.col("node").alias("subj"), "component"))
+    lab = broadcast_hint(labels)(labels.selectExpr("node AS subj", "component"))
     return triples.join(lab, "subj", "left").withColumn(
-        "component", F.coalesce("component", "subj")
+        "component", F.expr("coalesce(component, subj)")
     )

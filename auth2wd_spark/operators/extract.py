@@ -22,6 +22,18 @@ from ..schemas import RAW
 from ..sources.registry import PARSERS, ROUTES
 
 
+# Route patterns go into SQL as raw literals (r'...': no escapes), which
+# cannot hold a quote.
+assert not any("'" in pattern for _, pattern in ROUTES), "a route pattern holds a quote"
+# CASE tests its branches in order, so the first matching route wins
+_SOURCE = "CASE " + " ".join(f"WHEN regexp_like(url, r'{p}') THEN '{s}'" for s, p in ROUTES) + " END"
+_RECORD_ID = (
+    "CASE source "
+    + " ".join(f"WHEN '{s}' THEN regexp_extract(url, r'{p}', 1)" for s, p in ROUTES)
+    + " END"
+)
+
+
 def route(pages: DataFrame) -> DataFrame:
     """Tag each page with (source, record_id); unroutable pages drop out.
 
@@ -33,23 +45,10 @@ def route(pages: DataFrame) -> DataFrame:
     already-computed `source` column and therefore runs one regex on the
     tiny routed fraction instead of re-matching the whole table.
     """
-    source_expr = F.lit(None).cast("string")
-    # build right-to-left so the FIRST route wins (first-match semantics)
-    for source, pattern in reversed(ROUTES):
-        cond = F.regexp_like(F.col("url"), F.lit(pattern))
-        source_expr = F.when(cond, F.lit(source)).otherwise(source_expr)
-    routed = (
-        pages.select("url", "warc_ts", "text", "lang")
-        .withColumn("source", source_expr)
-        .filter(F.col("source").isNotNull())
+    routed = pages.selectExpr("url", "warc_ts", "text", "lang", f"{_SOURCE} AS source").filter(
+        "source IS NOT NULL"
     )
-
-    id_expr = F.lit(None).cast("string")
-    for source, pattern in reversed(ROUTES):
-        id_expr = F.when(
-            F.col("source") == source, F.regexp_extract(F.col("url"), pattern, 1)
-        ).otherwise(id_expr)
-    return routed.withColumn("record_id", id_expr)
+    return routed.selectExpr("*", f"{_RECORD_ID} AS record_id")
 
 
 def latest_snapshot(routed: DataFrame) -> DataFrame:
@@ -62,23 +61,13 @@ def latest_snapshot(routed: DataFrame) -> DataFrame:
     already unique — common for curated snapshots — the payload shuffle is
     skipped entirely. Re-crawled corpora pay it once, as they must.
     """
-    dup = (
-        routed.groupBy("source", "record_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > 1)
-        .limit(1)
-        .count()
-    )
+    keys = routed.groupBy("source", "record_id")
+    dup = keys.agg(F.expr("count(1) AS n")).filter("n > 1").limit(1).count()
     if dup == 0:
-        return routed.select("source", "record_id", "url", "text", "lang", "warc_ts")
-    return (
-        routed.groupBy("source", "record_id")
-        .agg(
-            F.max_by(F.struct("url", "text", "lang"), "warc_ts").alias("s"),
-            F.max("warc_ts").alias("warc_ts"),
-        )
-        .select("source", "record_id", "s.url", "s.text", "s.lang", "warc_ts")
-    )
+        return routed.selectExpr("source", "record_id", "url", "text", "lang", "warc_ts")
+    return keys.agg(
+        F.expr("max_by(struct(url, text, lang), warc_ts) AS s"), F.expr("max(warc_ts) AS warc_ts")
+    ).selectExpr("source", "record_id", "s.url", "s.text", "s.lang", "warc_ts")
 
 
 def attach_secondary_bodies(records: DataFrame) -> DataFrame:
@@ -87,18 +76,12 @@ def attach_secondary_bodies(records: DataFrame) -> DataFrame:
     The images side is a small filtered slice → broadcast-joined; primary
     records pass through untouched (SURVEY §2.1 S16).
     """
-    extra = (
-        records.filter(F.col("source") == "gbif_images")
-        .select(
-            F.col("record_id").alias("x_record_id"),
-            F.col("text").alias("extra_text"),
-        )
+    extra = records.filter("source = 'gbif_images'").selectExpr(
+        "record_id AS x_record_id", "text AS extra_text"
     )
-    primary = records.filter(F.col("source") != "gbif_images")
+    primary = records.filter("source != 'gbif_images'")
     return primary.join(
-        F.broadcast(extra),
-        (primary["source"] == "gbif") & (primary["record_id"] == extra["x_record_id"]),
-        "left",
+        F.broadcast(extra), F.expr("source = 'gbif' AND record_id = x_record_id"), "left"
     ).drop("x_record_id")
 
 
@@ -219,7 +202,7 @@ def extract(records: DataFrame) -> DataFrame:
             ]
             yield pa.RecordBatch.from_arrays(arrays, schema=schema)
 
-    return records.select(*cols).mapInArrow(parse_batches, schema=RAW)
+    return records.selectExpr(*cols).mapInArrow(parse_batches, schema=RAW)
 
 
 def extract_pages(pages: DataFrame) -> DataFrame:

@@ -42,9 +42,8 @@ The reference caches lookup hits AND misses in-process
 from __future__ import annotations
 
 from collections.abc import Callable
-from functools import reduce
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from ..properties import KEY2PROP, RESCUE_CLASSES
 from ..schemas import TRIPLES
@@ -80,29 +79,30 @@ def broadcast_hint(base: DataFrame) -> Callable[[DataFrame], DataFrame]:
     return F.broadcast if size <= BROADCAST_MAX_BYTES else (lambda df: df)
 
 
-def _single_hit(qid: Column) -> Column:
-    """Aggregate: the group's one non-null `qid`, or null when the group
-    holds none or several distinct ones."""
-    return F.when(F.min(qid) == F.max(qid), F.min(qid))
+def _single_hit(qid: str) -> str:
+    """Aggregate (SQL): the group's one non-null `qid`, or null when the
+    group holds none or several distinct ones."""
+    return f"CASE WHEN min({qid}) = max({qid}) THEN min({qid}) END"
 
 
 def _id_index(id_to_qid: DataFrame) -> DataFrame:
     """(property, id) → J1's single-hit `qid` and J6's single-hit
     `taxon_qid` (the same test over P31=Q16521 rows); keys with neither
     are left out."""
+    taxon_qid = "CASE WHEN p31 = 'Q16521' THEN qid END"
     return (
         id_to_qid.groupBy("property", "id")
         .agg(
-            _single_hit(F.col("qid")).alias("qid"),
-            _single_hit(F.when(F.col("p31") == "Q16521", F.col("qid"))).alias("taxon_qid"),
+            F.expr(f"{_single_hit('qid')} AS qid"),
+            F.expr(f"{_single_hit(taxon_qid)} AS taxon_qid"),
         )
-        .filter(F.col("qid").isNotNull() | F.col("taxon_qid").isNotNull())
+        .filter("qid IS NOT NULL OR taxon_qid IS NOT NULL")
     )
 
 
 def single_hit_index(id_to_qid: DataFrame) -> DataFrame:
     """(property, id) pairs mapping to exactly one QID (J1 precision guard)."""
-    return _id_index(id_to_qid).filter(F.col("qid").isNotNull()).drop("taxon_qid")
+    return _id_index(id_to_qid).filter("qid IS NOT NULL").drop("taxon_qid")
 
 
 def label_extid_index(id_to_qid: DataFrame) -> DataFrame:
@@ -119,11 +119,17 @@ def label_extid_index(id_to_qid: DataFrame) -> DataFrame:
     record's name as its label.
     """
     return (
-        id_to_qid.filter(F.col("label_en").isNotNull())
+        id_to_qid.filter("label_en IS NOT NULL")
         .groupBy("property", "id", "label_en")
-        .agg(_single_hit(F.col("qid")).alias("qid"))
-        .filter(F.col("qid").isNotNull())
+        .agg(F.expr(f"{_single_hit('qid')} AS qid"))
+        .filter("qid IS NOT NULL")
     )
+
+
+def _values(spark, rows: str, names: str) -> DataFrame:
+    """A local relation of SQL `rows` with the column `names`; its size
+    estimate is exact, so `broadcast_hint` never counts it."""
+    return spark.sql(f"SELECT * FROM VALUES {rows} AS t({names})")
 
 
 def rescue_index(id_to_qid: DataFrame, spark) -> DataFrame:
@@ -131,66 +137,68 @@ def rescue_index(id_to_qid: DataFrame, spark) -> DataFrame:
 
     Single-hit within each rescue property's class set.
     """
-    class_rows = [
-        (prop, cls) for prop, classes in RESCUE_CLASSES.items() for cls in classes
-    ]
-    classmap = spark.createDataFrame(class_rows, "rescue_property INT, p31 STRING")
+    classes = ", ".join(
+        f"({prop}, '{cls}')" for prop, classes in RESCUE_CLASSES.items() for cls in classes
+    )
+    classmap = _values(spark, classes, "rescue_property, p31")
     return (
-        id_to_qid.filter(F.col("label_en").isNotNull())
+        id_to_qid.filter("label_en IS NOT NULL")
         .join(F.broadcast(classmap), "p31")
         .groupBy("rescue_property", "label_en")
-        .agg(_single_hit(F.col("qid")).alias("qid"))
-        .filter(F.col("qid").isNotNull())
+        .agg(F.expr(f"{_single_hit('qid')} AS qid"))
+        .filter("qid IS NOT NULL")
     )
 
 
 def viaf_key_map(spark) -> DataFrame:
     """property → VIAF source key (KEY2PROP reversed, viaf.rs:168-173)."""
-    rows = [(prop, key) for key, prop in KEY2PROP.items()]
-    return spark.createDataFrame(rows, "property INT, source_key STRING")
+    keys = ", ".join(f"({prop}, '{key}')" for key, prop in KEY2PROP.items())
+    return _values(spark, keys, "property, source_key")
 
 
-def _probe(df: DataFrame, index: DataFrame, when: Column, *on: tuple[str, str]) -> DataFrame:
-    """Conditional left join: the rows of `df` where `when` holds look up
-    `index` on each (df column, index column) pair in `on`. The index's
-    key columns are dropped, so only its value columns join `df`; they
-    are null on every other row and on misses."""
-    cond = reduce(lambda c, k: c & (df[k[0]] == index[k[1]]), on, when)
-    return df.join(index, cond, "left").drop(*(index[k] for _, k in on))
+def _probe(df: DataFrame, index: DataFrame, when: str, *on: tuple[str, str]) -> DataFrame:
+    """Conditional left join: the rows of `df` where `when` (SQL) holds
+    look up `index` on each (df column, index column) pair in `on`. The
+    index's key columns are dropped, so only its value columns join `df`;
+    they are null on every other row and on misses. Column names must not
+    repeat across `df` and `index`."""
+    cond = " AND ".join([f"({when})", *(f"{a} = {b}" for a, b in on)])
+    return df.join(index, F.expr(cond), "left").drop(*(b for _, b in on))
 
 
 # a candidate's key in the (property, id)-keyed indexes
 _BY_ID = (("cand_property", "property"), ("cand_id", "id"))
 
 
-def _as_triples(df: DataFrame, *cases, **extra: Column) -> DataFrame:
-    """Project `df` onto TRIPLES, plus the `extra` columns. Each case is
-    `(cond, keep, values)`: on the rows where `cond` holds, `values`
-    (Columns or Python literals) fill their columns, the other columns
-    named in `keep` pass through, and every other TRIPLES column is a typed
-    null. Rows that no case matches pass through unchanged; the cases must
-    be disjoint."""
+def _as_triples(df: DataFrame, *cases, **extra: str) -> DataFrame:
+    """Project `df` onto TRIPLES, plus the `extra` columns, in one
+    projection written as SQL text. Each case is `(cond, keep, values)`:
+    on the rows where `cond` holds, `values` (SQL expressions) fill their
+    columns, the other columns named in `keep` pass through, and every
+    other TRIPLES column is a typed null. Rows that no case matches pass
+    through unchanged; the cases must be disjoint."""
 
     def column(field):
-        out = F.col(field.name)
-        for cond, keep, values in cases:
-            if field.name in values or field.name not in keep:
-                value = values.get(field.name)
-                value = value if isinstance(value, Column) else F.lit(value)
-                out = F.when(cond, value.cast(field.dataType)).otherwise(out)
-        return out.alias(field.name)
+        whens = [
+            f"WHEN {cond} THEN CAST({values.get(field.name, 'NULL')} AS {field.dataType.simpleString()})"
+            for cond, keep, values in cases
+            if field.name in values or field.name not in keep
+        ]
+        if not whens:
+            return field.name
+        return f"CASE {' '.join(whens)} ELSE {field.name} END AS {field.name}"
 
-    return df.select(*map(column, TRIPLES.fields), *(v.alias(k) for k, v in extra.items()))
+    return df.selectExpr(*map(column, TRIPLES.fields), *(f"{v} AS {k}" for k, v in extra.items()))
 
 
 _PROVENANCE = ("subj", "src_property", "src_id", "src_url", "ord")
 
 
-def _claim(cond: Column, obj_type: str, obj_value: Column, **values):
+def _claim(cond: str, obj_type: str, obj_value: str, **values: str):
     """The `_as_triples` case for resolved candidates and rescued
     prop_text: normal-rank claims without qualifiers that keep their
     provenance, `pred` and `has_ref` unless `values` replace them."""
-    claim = {"kind": "claim", "rank": "normal", "qualifiers": "", "obj_type": obj_type}
+    claim = {"kind": "'claim'", "rank": "'normal'", "qualifiers": "''", "obj_type": obj_type}
     return cond, (*_PROVENANCE, "pred", "has_ref"), {**claim, "obj_value": obj_value, **values}
 
 
@@ -206,66 +214,62 @@ def link(
     carries none of the five columns only linking reads: the candidate
     key (`cand_kind`, `cand_property`, `cand_id`), `needs_gnd_check` and
     `rescue`. Building it runs no Spark job when the dimension tables have
-    statistics (see `broadcast_hint`).
+    statistics (see `broadcast_hint`). Conditions and projections are SQL
+    text: each costs one py4j round trip to build, where the same
+    expression as a tree of Column calls costs one per node.
 
     `label_retry` (default False = reference behavior) enables the J2
     label-disambiguation of multi-hit extids — a deviation from the
     reference, which parks every J1 miss as prop_text (see
     label_extid_index docstring)."""
     spark = raw.sparkSession
-    cand_kind = F.col("cand_kind")
     by_id = broadcast_hint(id_to_qid)
 
     # J7 — drop P227 sameAs claims whose GND id is known-invalid
-    gnd_invalid = F.broadcast(valid_gnd_ids.filter(~F.col("valid")).select("gnd_id"))
-    df = raw.join(
-        gnd_invalid,
-        (raw["obj_value"] == gnd_invalid["gnd_id"]) & raw["needs_gnd_check"],
-        "left_anti",
-    )
+    gnd_invalid = F.broadcast(valid_gnd_ids.filter("NOT valid").selectExpr("gnd_id"))
+    df = raw.join(gnd_invalid, F.expr("obj_value = gnd_id AND needs_gnd_check"), "left_anti")
 
     # J1 + J6 — extid and parent_taxon candidates probe one index
-    df = _probe(df, by_id(_id_index(id_to_qid)), cand_kind.isin("extid", "parent_taxon"), *_BY_ID)
-    item = F.when(cand_kind == "parent_taxon", F.col("taxon_qid")).otherwise(F.col("qid"))
+    df = _probe(df, by_id(_id_index(id_to_qid)), "cand_kind IN ('extid', 'parent_taxon')", *_BY_ID)
+    item = "CASE WHEN cand_kind = 'parent_taxon' THEN taxon_qid ELSE qid END"
 
     # J5 — VIAF inference → P214 external-id claim
     viaf_idx = (
         viaf_lookup.join(F.broadcast(viaf_key_map(spark)), "source_key")
         .groupBy("property", "id")
-        .agg(F.min("viaf_id").alias("viaf_id"))
+        .agg(F.expr("min(viaf_id) AS viaf_id"))
     )
-    df = _probe(df, broadcast_hint(viaf_lookup)(viaf_idx), cand_kind == "viaf", *_BY_ID)
+    df = _probe(df, broadcast_hint(viaf_lookup)(viaf_idx), "cand_kind = 'viaf'", *_BY_ID)
 
     # J2 (extension, gated) — label-constrained retry for J1 misses that
     # carry a name; with label_retry=False (reference behavior) every J1
     # miss parks directly as prop_text
-    named_miss = (cand_kind == "extid") & F.col("qid").isNull() & F.col("fallback_text").isNotNull()
+    named_miss = "cand_kind = 'extid' AND qid IS NULL AND fallback_text IS NOT NULL"
     if label_retry:
         lbl_idx = label_extid_index(id_to_qid).withColumnRenamed("qid", "label_qid")
         df = _probe(df, by_id(lbl_idx), named_miss, *_BY_ID, ("fallback_text", "label_en"))
-        item = F.coalesce(item, F.col("label_qid"))
-        named_miss = named_miss & F.col("label_qid").isNull()
+        item = f"coalesce({item}, label_qid)"
+        named_miss = f"{named_miss} AND label_qid IS NULL"
 
     # each candidate becomes a claim, a parked prop_text (rescuable, with
     # has_ref null, so a J3 rescue makes it true) or nothing
-    is_cand = F.col("kind") == "candidate"
-    value = F.coalesce(item, F.col("viaf_id"))
-    claim = is_cand & value.isNotNull()
-    parked = is_cand & named_miss
-    obj_type = F.when(F.col("viaf_id").isNotNull(), "extid").otherwise("item")
+    is_cand = "kind = 'candidate'"
+    value = f"coalesce({item}, viaf_id)"
+    claim = f"{is_cand} AND {value} IS NOT NULL"
+    parked = f"{is_cand} AND {named_miss}"
+    obj_type = "CASE WHEN viaf_id IS NOT NULL THEN 'extid' ELSE 'item' END"
     df = _as_triples(
-        df.filter(~is_cand | claim | parked),
+        df.filter(f"NOT ({is_cand}) OR ({claim}) OR ({parked})"),
         _claim(claim, obj_type, value),
-        (parked, (*_PROVENANCE, "fallback_property", "fallback_text"), {"kind": "prop_text"}),
-        rescue=F.when(parked, True).otherwise(F.col("rescue")),
+        (parked, (*_PROVENANCE, "fallback_property", "fallback_text"), {"kind": "'prop_text'"}),
+        rescue=f"CASE WHEN {parked} THEN true ELSE rescue END",
     )
 
     # J3 — typed rescue over all prop_text: the parsed rows and the parked
     # J1/J2 misses
     rescuable = (
-        (F.col("kind") == "prop_text")
-        & F.coalesce(F.col("rescue"), F.lit(False))
-        & F.col("fallback_property").isin(list(RESCUE_CLASSES))
+        "kind = 'prop_text' AND coalesce(rescue, false)"
+        f" AND fallback_property IN ({', '.join(map(str, RESCUE_CLASSES))})"
     )
     df = _probe(
         df,
@@ -274,8 +278,7 @@ def link(
         ("fallback_property", "rescue_property"),
         ("fallback_text", "label_en"),
     )
-    pred = F.concat(F.lit("P"), F.col("fallback_property").cast("string"))
-    has_ref = F.coalesce(F.col("has_ref"), F.lit(True))
+    pred = "concat('P', CAST(fallback_property AS STRING))"
     return _as_triples(
-        df, _claim(F.col("qid").isNotNull(), "item", F.col("qid"), pred=pred, has_ref=has_ref)
+        df, _claim("qid IS NOT NULL", "'item'", "qid", pred=pred, has_ref="coalesce(has_ref, true)")
     )

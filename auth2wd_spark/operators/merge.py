@@ -28,25 +28,27 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..properties import P_DATE_OF_BIRTH, P_DATE_OF_DEATH, STATED_IN
 
-_DATE_PREDS = (f"P{P_DATE_OF_BIRTH}", f"P{P_DATE_OF_DEATH}")
+# Every expression below is SQL text: building a plan costs one py4j
+# round trip per expression string, where a tree of Column calls costs
+# one per node (ARCHITECTURE.md, "Building a plan").
 
-
-def _stated_in_expr():
-    mapping = F.create_map(
-        *[x for prop, qid in STATED_IN.items() for x in (F.lit(prop), F.lit(qid))]
-    )
-    return mapping[F.col("src_property")]
-
-
-_CLAIM_KEY = (
-    "component",
-    "pred",
-    "obj_type",
-    "obj_value",
-    "obj_lang",
-    "obj_precision",
-    "qual_key",
+# the compact per-source reference: (stated-in QID, P{source property},
+# source id), null on claims without a reference
+_STATED_IN = "map(" + ", ".join(f"{prop}, '{qid}'" for prop, qid in STATED_IN.items()) + ")"
+_REF = (
+    "CASE WHEN has_ref THEN named_struct("
+    f"'stated_in', {_STATED_IN}[src_property], "
+    "'src_prop', concat('P', CAST(src_property AS STRING)), "
+    "'src_id', src_id) END"
 )
+# P225 merges ignoring qualifiers (ItemMerger properties_ignore_qualifier_match)
+_QUAL_KEY = "CASE WHEN pred = 'P225' THEN '' ELSE qualifiers END"
+
+_CLAIM_KEY = ("component", "pred", "obj_type", "obj_value", "obj_lang", "obj_precision", "qual_key")
+_ANY_DEPRECATED = "max(CASE WHEN rank = 'deprecated' THEN 1 ELSE 0 END)"
+
+_IS_DATE = f"pred IN ('P{P_DATE_OF_BIRTH}', 'P{P_DATE_OF_DEATH}') AND obj_type = 'time'"
+_DEPRECATION = '["P2241", "item", "Q42727519"]'
 
 
 def merge_claims(with_comp: DataFrame, ref_cap: int | None = None) -> DataFrame:
@@ -64,110 +66,80 @@ def merge_claims(with_comp: DataFrame, ref_cap: int | None = None) -> DataFrame:
     slice keeps its cap sort-smallest, and the global cap smallest are
     always within the union of per-salt smallest.
     """
-    claims = with_comp.filter(F.col("kind") == "claim")
-
-    ref = F.when(
-        F.col("has_ref"),
-        F.struct(
-            _stated_in_expr().alias("stated_in"),
-            F.concat(F.lit("P"), F.col("src_property").cast("string")).alias("src_prop"),
-            F.col("src_id").alias("src_id"),
-        ),
+    keyed = with_comp.filter("kind = 'claim'").selectExpr(
+        "*", f"{_REF} AS ref", f"{_QUAL_KEY} AS qual_key"
     )
-
-    # P225 merges ignoring qualifiers (ItemMerger properties_ignore_qualifier_match)
-    qual_key = F.when(F.col("pred") == "P225", F.lit("")).otherwise(F.col("qualifiers"))
-
-    keyed = claims.withColumn("ref", ref).withColumn("qual_key", qual_key)
-    depr = F.max(F.when(F.col("rank") == "deprecated", 1).otherwise(0)).alias("any_depr")
-
     if ref_cap is None:
-        grouped = keyed.groupBy(*_CLAIM_KEY).agg(
+        aggs = (
             # deterministic representative qualifiers: first by (subj, ord)
-            F.min_by("qualifiers", F.struct("subj", "ord")).alias("qualifiers"),
-            depr,
-            F.array_sort(F.collect_set("ref")).alias("references"),
-            F.array_sort(F.collect_set("src_url")).alias("src_urls"),
-            F.min(F.struct("subj", "ord")).alias("first_seen"),
+            "min_by(qualifiers, struct(subj, ord)) AS qualifiers",
+            "array_sort(collect_set(ref)) AS `references`",
+            "array_sort(collect_set(src_url)) AS src_urls",
+            "min(struct(subj, ord)) AS first_seen",
+            _rank(_ANY_DEPRECATED),
         )
     else:
-        n_salts = 16
-        sliced_refs = F.slice(F.array_sort(F.collect_set("ref")), 1, ref_cap)
-        sliced_urls = F.slice(F.array_sort(F.collect_set("src_url")), 1, ref_cap)
+        cap = int(ref_cap)
+        salt = F.expr("pmod(xxhash64(subj, ord), 16) AS salt")
         partial = (
-            keyed.withColumn(
-                "salt", F.pmod(F.xxhash64("subj", "ord"), F.lit(n_salts))
-            )
-            .groupBy(*_CLAIM_KEY, "salt")
-            .agg(
-                F.min_by(
-                    F.struct(F.col("subj"), F.col("ord"), F.col("qualifiers")),
-                    F.struct("subj", "ord"),
-                ).alias("qual_p"),
-                depr,
-                sliced_refs.alias("refs_p"),
-                sliced_urls.alias("urls_p"),
-                F.min(F.struct("subj", "ord")).alias("first_seen"),
-            )
+            "min_by(struct(subj, ord, qualifiers), struct(subj, ord)) AS qual_p",
+            f"{_ANY_DEPRECATED} AS any_depr",
+            f"slice(array_sort(collect_set(ref)), 1, {cap}) AS refs_p",
+            f"slice(array_sort(collect_set(src_url)), 1, {cap}) AS urls_p",
+            "min(struct(subj, ord)) AS first_seen",
         )
-        merge_slices = lambda col: F.slice(  # noqa: E731
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list(col)))), 1, ref_cap
-        )
-        grouped = partial.groupBy(*_CLAIM_KEY).agg(
+        keyed = keyed.groupBy(*_CLAIM_KEY, salt).agg(*map(F.expr, partial))
+        merge_slices = "slice(array_sort(array_distinct(flatten(collect_list({0})))), 1, %d) AS {1}" % cap
+        aggs = (
             # (subj, ord) is unique per row, so struct-min == min_by(subj, ord)
-            F.min("qual_p").getField("qualifiers").alias("qualifiers"),
-            F.max("any_depr").alias("any_depr"),
-            merge_slices("refs_p").alias("references"),
-            merge_slices("urls_p").alias("src_urls"),
-            F.min("first_seen").alias("first_seen"),
+            "min(qual_p).qualifiers AS qualifiers",
+            merge_slices.format("refs_p", "`references`"),
+            merge_slices.format("urls_p", "src_urls"),
+            "min(first_seen) AS first_seen",
+            _rank("max(any_depr)"),
         )
+    grouped = keyed.groupBy(*_CLAIM_KEY).agg(*map(F.expr, aggs))
+    return fix_dates(grouped.drop("qual_key"))
 
-    grouped = grouped.withColumn(
-        "rank", F.when(F.col("any_depr") == 1, "deprecated").otherwise("normal")
-    ).drop("any_depr", "qual_key")
-    return fix_dates(grouped)
+
+def _rank(any_deprecated: str) -> str:
+    """A merged claim is deprecated when any of its claims is."""
+    return f"CASE WHEN {any_deprecated} = 1 THEN 'deprecated' ELSE 'normal' END AS rank"
 
 
 def fix_dates(claims: DataFrame) -> DataFrame:
     """A6: deprecate lower-precision P569/P570, qualifier P2241=Q42727519.
 
-    The per-(component, pred) max precision is a hash AGGREGATION joined
-    back, not a window: an unbounded window sorts every (component, pred)
-    partition on one reducer — a giant hot component becomes a straggler —
-    while the agg combines map-side and the join is AQE-planned (skew
-    splitting applies). Same semantics: rows in groups with no date claims
-    get a null max and the `<` comparison is false.
+    Only date claims can be demoted, so only they meet their
+    per-(component, pred) max precision: the date claims take it from a
+    window, and every other claim passes through. Both filters are on
+    grouping keys of the claims aggregation, so the optimizer splits that
+    aggregation in two; the merged claims are shuffled once, and only the
+    date claims (deduplicated, a small share) a second time, for the
+    window. Not a join of all claims with aggregated maxima: that shuffles
+    every merged claim again, and AQE's run-time conversion of it to a
+    broadcast made the layer's jobs and shuffle vary between runs. The
+    window sorts each (component, pred) partition on one reducer; over
+    deduplicated date claims that is one row per distinct date of a
+    component.
+
+    The output keeps `claims`' columns, with `component` and `pred` first.
     """
-    is_date = F.col("pred").isin(*_DATE_PREDS) & (F.col("obj_type") == "time")
-    maxes = (
-        claims.filter(is_date)
-        .groupBy("component", "pred")
-        .agg(F.max("obj_precision").alias("_max_prec"))
-    )
-    claims = claims.join(maxes, ["component", "pred"], "left")
-    max_prec = F.col("_max_prec")
-    demote = is_date & (F.col("rank") == "normal") & (F.col("obj_precision") < max_prec)
-    deprecation_qualifier = F.lit('[["P2241", "item", "Q42727519"]]')
-    return claims.withColumn(
-        "qualifiers",
-        F.when(
-            demote,
-            F.when(
-                (F.col("qualifiers") == "") | F.col("qualifiers").isNull(),
-                deprecation_qualifier,
-            ).otherwise(
-                # append to existing qualifier list: strip exactly the final
-                # ']' (rtrim would eat the whole ']]' tail of nested arrays
-                # and corrupt the JSON)
-                F.concat(
-                    F.expr("substring(qualifiers, 1, length(qualifiers) - 1)"),
-                    F.lit(', ["P2241", "item", "Q42727519"]]'),
-                )
-            ),
-        ).otherwise(F.col("qualifiers")),
-    ).withColumn("rank", F.when(demote, "deprecated").otherwise(F.col("rank"))).drop(
-        "_max_prec"
-    )
+    demote = "rank = 'normal' AND obj_precision < max(obj_precision) OVER (PARTITION BY component, pred)"
+    # append to an existing qualifier list: strip exactly the final ']'
+    # (rtrim would eat the whole ']]' tail of nested arrays and corrupt
+    # the JSON)
+    replaced = {
+        "qualifiers": f"CASE WHEN {demote} THEN CASE WHEN qualifiers = '' OR qualifiers IS NULL"
+        f" THEN '[{_DEPRECATION}]'"
+        f" ELSE concat(substring(qualifiers, 1, length(qualifiers) - 1), ', {_DEPRECATION}]') END"
+        " ELSE qualifiers END AS qualifiers",
+        "rank": f"CASE WHEN {demote} THEN 'deprecated' ELSE rank END AS rank",
+    }
+    names = ["component", "pred", *(c for c in claims.columns if c not in ("component", "pred"))]
+    others = claims.filter(f"({_IS_DATE}) IS NOT TRUE").selectExpr(*(f"`{c}`" for c in names))
+    dates = claims.filter(_IS_DATE).selectExpr(*(replaced.get(c, f"`{c}`") for c in names))
+    return others.union(dates)
 
 
 def merge_terms(with_comp: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -177,51 +149,39 @@ def merge_terms(with_comp: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     row_number window: the window sorts every (component, lang) partition
     on one reducer, so a pathological giant component degenerates to a
     single task, while min_by combines map-side and never sorts. The alias
-    pool is simply ALL label rows minus the winning label value — identical
-    to the old "rank > 1" set because duplicates of the winning value were
-    filtered by the != label predicate anyway.
+    pool is simply ALL label and alias rows minus the winning label value
+    — identical to the old "rank > 1" set because duplicates of the
+    winning value were filtered by the != label predicate anyway.
     """
-    first = F.min_by("obj_value", F.struct("subj", "ord"))
 
-    label_rows = with_comp.filter(F.col("kind") == "label")
-    first_label = (
-        label_rows.groupBy("component", "obj_lang")
-        .agg(first.alias("label"))
-        .select("component", F.col("obj_lang").alias("lang"), "label")
-    )
-    alias_pool = label_rows.select("component", "obj_lang", "obj_value").unionByName(
-        with_comp.filter(F.col("kind") == "alias").select(
-            "component", "obj_lang", "obj_value"
+    def first(kind: str) -> DataFrame:
+        return (
+            with_comp.filter(f"kind = '{kind}'")
+            .groupBy("component", "obj_lang")
+            .agg(F.expr(f"min_by(obj_value, struct(subj, ord)) AS {kind}"))
         )
-    )
+
+    labels = first("label")
     aliases = (
-        alias_pool.join(
-            first_label.withColumnRenamed("lang", "obj_lang"),
-            ["component", "obj_lang"],
-            "left",
-        )
-        .filter(F.col("label").isNull() | (F.col("obj_value") != F.col("label")))
-        .select(
-            "component",
-            F.col("obj_lang").alias("lang"),
-            F.col("obj_value").alias("alias"),
-        )
+        with_comp.filter("kind IN ('label', 'alias')")
+        .join(labels, ["component", "obj_lang"], "left")
+        .filter("label IS NULL OR obj_value != label")
+        .selectExpr("component", "obj_lang AS lang", "obj_value AS alias")
         .distinct()
     )
-    descriptions = (
-        with_comp.filter(F.col("kind") == "description")
-        .groupBy("component", "obj_lang")
-        .agg(first.alias("description"))
-        .select("component", F.col("obj_lang").alias("lang"), "description")
+    descriptions = first("description")
+    return (
+        labels.withColumnRenamed("obj_lang", "lang"),
+        aliases,
+        descriptions.withColumnRenamed("obj_lang", "lang"),
     )
-    return first_label, aliases, descriptions
 
 
 def merge_prop_text(with_comp: DataFrame) -> DataFrame:
     """A4: distinct sorted prop_text per component."""
     return (
-        with_comp.filter(F.col("kind") == "prop_text")
-        .select("component", "fallback_property", "fallback_text")
+        with_comp.filter("kind = 'prop_text'")
+        .selectExpr("component", "fallback_property", "fallback_text")
         .distinct()
     )
 
@@ -233,9 +193,7 @@ def merge_component(
     claims = merge_claims(with_comp, ref_cap=ref_cap)
     labels, aliases, descriptions = merge_terms(with_comp)
     prop_text = merge_prop_text(with_comp)
-    members = (
-        with_comp.select("component", "subj").distinct()
-    )
+    members = with_comp.selectExpr("component", "subj").distinct()
     return {
         "claims": claims,
         "labels": labels,

@@ -20,6 +20,7 @@ first reference, so no session restart is needed).
 
 from __future__ import annotations
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 DEFAULT_CATALOG = "a2w"
@@ -28,12 +29,14 @@ _ICEBERG_CATALOG_CLASS = "org.apache.iceberg.spark.SparkCatalog"
 
 
 def iceberg_available(spark: SparkSession) -> bool:
-    """True iff the Iceberg Spark runtime is on the JVM classpath."""
-    try:
-        spark._jvm.java.lang.Class.forName(_ICEBERG_CATALOG_CLASS)  # noqa: SLF001
-        return True
-    except Exception:
-        return False
+    """True iff the Iceberg Spark runtime is on the JVM classpath.
+
+    Spark's own `Utils.classIsLoadable` answers without throwing, so the
+    probe is two py4j round trips; a `Class.forName` that fails costs
+    dozens more, which fetch the Java stack trace of the exception."""
+    gateway = spark.sparkContext._gateway  # noqa: SLF001
+    utils = JavaClass("org.apache.spark.util.Utils", gateway._gateway_client)  # noqa: SLF001
+    return bool(utils.classIsLoadable(_ICEBERG_CATALOG_CLASS))
 
 
 def configure_catalog(

@@ -43,6 +43,7 @@ from functools import partial
 from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.utils import get_lit_sql_str
 from pyspark.util import inheritable_thread_target
 
 from ..operators.cc import assign_components, build_edges, connected_components
@@ -197,16 +198,11 @@ def run_pipeline(
 def attach_retrieved_date(claims: DataFrame, as_of: str) -> DataFrame:
     """Expand compact references into full Wikibase reference snak groups
     (P248 stated-in, P{src} id, P813 retrieved = as_of) — sink-side only."""
-    ref_struct = F.transform(
-        "references",
-        lambda r: F.struct(
-            r["stated_in"].alias("stated_in"),
-            r["src_prop"].alias("src_prop"),
-            r["src_id"].alias("src_id"),
-            F.lit(as_of).alias("retrieved"),
-        ),
+    ref_struct = (
+        "transform(`references`, r -> named_struct('stated_in', r.stated_in,"
+        f" 'src_prop', r.src_prop, 'src_id', r.src_id, 'retrieved', {get_lit_sql_str(as_of)}))"
     )
-    return claims.withColumn("references", ref_struct)
+    return claims.withColumn("references", F.expr(ref_struct))
 
 
 def write_outputs(tables: dict[str, DataFrame], out_dir: str, as_of: str = "2026-01-01") -> bool:
