@@ -22,7 +22,7 @@ from .linking import broadcast_hint
 
 EDGE_PROPERTIES = tuple(sorted(set(SUPPORTED_PROPERTIES) | {P_VIAF}))
 # the property number of a `P{n}` predicate, as SQL
-_PROP_NUM = r"CAST(regexp_extract(pred, r'^P(\d+)$', 1) AS INT)"
+_PROP_NUM = "CAST(regexp_extract(pred, '^P([0-9]+)$', 1) AS INT)"
 
 
 def build_edges(triples: DataFrame) -> DataFrame:

@@ -16,21 +16,24 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.utils import get_lit_sql_str
 
 from ..functions.extid import do_not_use_external_url, subj_key
 from ..schemas import RAW
 from ..sources.registry import PARSERS, ROUTES
 
 
-# Route patterns go into SQL as raw literals (r'...': no escapes), which
-# cannot hold a quote.
-assert not any("'" in pattern for _, pattern in ROUTES), "a route pattern holds a quote"
 # CASE tests its branches in order, so the first matching route wins
-_SOURCE = "CASE " + " ".join(f"WHEN regexp_like(url, r'{p}') THEN '{s}'" for s, p in ROUTES) + " END"
-_RECORD_ID = (
-    "CASE source "
-    + " ".join(f"WHEN '{s}' THEN regexp_extract(url, r'{p}', 1)" for s, p in ROUTES)
-    + " END"
+_SOURCE = "CASE {} END".format(
+    " ".join(
+        f"WHEN regexp_like(url, {get_lit_sql_str(p)}) THEN {get_lit_sql_str(s)}" for s, p in ROUTES
+    )
+)
+_RECORD_ID = "CASE source {} END".format(
+    " ".join(
+        f"WHEN {get_lit_sql_str(s)} THEN regexp_extract(url, {get_lit_sql_str(p)}, 1)"
+        for s, p in ROUTES
+    )
 )
 
 

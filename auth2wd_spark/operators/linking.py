@@ -44,6 +44,7 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.utils import get_lit_sql_str
 
 from ..properties import KEY2PROP, RESCUE_CLASSES
 from ..schemas import TRIPLES
@@ -127,8 +128,8 @@ def label_extid_index(id_to_qid: DataFrame) -> DataFrame:
 
 
 def _values(spark, rows: str, names: str) -> DataFrame:
-    """A local relation of SQL `rows` with the column `names`; its size
-    estimate is exact, so `broadcast_hint` never counts it."""
+    """A local relation of SQL `rows` with the column `names`: about 5
+    py4j calls, where `createDataFrame` of a four-row Python list makes 35."""
     return spark.sql(f"SELECT * FROM VALUES {rows} AS t({names})")
 
 
@@ -138,7 +139,9 @@ def rescue_index(id_to_qid: DataFrame, spark) -> DataFrame:
     Single-hit within each rescue property's class set.
     """
     classes = ", ".join(
-        f"({prop}, '{cls}')" for prop, classes in RESCUE_CLASSES.items() for cls in classes
+        f"({prop}, {get_lit_sql_str(cls)})"
+        for prop, classes in RESCUE_CLASSES.items()
+        for cls in classes
     )
     classmap = _values(spark, classes, "rescue_property, p31")
     return (
@@ -152,7 +155,7 @@ def rescue_index(id_to_qid: DataFrame, spark) -> DataFrame:
 
 def viaf_key_map(spark) -> DataFrame:
     """property → VIAF source key (KEY2PROP reversed, viaf.rs:168-173)."""
-    keys = ", ".join(f"({prop}, '{key}')" for key, prop in KEY2PROP.items())
+    keys = ", ".join(f"({prop}, {get_lit_sql_str(key)})" for key, prop in KEY2PROP.items())
     return _values(spark, keys, "property, source_key")
 
 

@@ -25,6 +25,7 @@ Semantics replicated:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.utils import get_lit_sql_str
 
 from ..properties import P_DATE_OF_BIRTH, P_DATE_OF_DEATH, STATED_IN
 
@@ -34,7 +35,9 @@ from ..properties import P_DATE_OF_BIRTH, P_DATE_OF_DEATH, STATED_IN
 
 # the compact per-source reference: (stated-in QID, P{source property},
 # source id), null on claims without a reference
-_STATED_IN = "map(" + ", ".join(f"{prop}, '{qid}'" for prop, qid in STATED_IN.items()) + ")"
+_STATED_IN = "map({})".format(
+    ", ".join(f"{prop}, {get_lit_sql_str(qid)}" for prop, qid in STATED_IN.items())
+)
 _REF = (
     "CASE WHEN has_ref THEN named_struct("
     f"'stated_in', {_STATED_IN}[src_property], "
@@ -111,35 +114,39 @@ def fix_dates(claims: DataFrame) -> DataFrame:
     """A6: deprecate lower-precision P569/P570, qualifier P2241=Q42727519.
 
     Only date claims can be demoted, so only they meet their
-    per-(component, pred) max precision: the date claims take it from a
-    window, and every other claim passes through. Both filters are on
-    grouping keys of the claims aggregation, so the optimizer splits that
-    aggregation in two; the merged claims are shuffled once, and only the
-    date claims (deduplicated, a small share) a second time, for the
-    window. Not a join of all claims with aggregated maxima: that shuffles
-    every merged claim again, and AQE's run-time conversion of it to a
-    broadcast made the layer's jobs and shuffle vary between runs. The
-    window sorts each (component, pred) partition on one reducer; over
-    deduplicated date claims that is one row per distinct date of a
-    component.
-
-    The output keeps `claims`' columns, with `component` and `pred` first.
+    per-(component, pred) max precision: a hash aggregation over the date
+    claims, joined back to them, while every other claim passes through.
+    Both filters are on grouping keys of the claims aggregation, so the
+    optimizer splits that aggregation in two; the merged claims are
+    shuffled once, and only the date claims (deduplicated, a small share)
+    again, for the maxima and the join. Not a join of all claims with the
+    maxima: that shuffles every merged claim again, and its executed plan
+    (jobs, shuffle) varied between runs. Not a window over the date
+    claims: it sorts each (component, pred) partition on one reducer, and
+    it was no faster on one giant component (ARCHITECTURE.md, Merge).
+    The left join keeps date claims without a component, undemoted.
     """
-    demote = "rank = 'normal' AND obj_precision < max(obj_precision) OVER (PARTITION BY component, pred)"
+    dates = claims.filter(_IS_DATE)
+    maxima = dates.groupBy("component", "pred").agg(F.expr("max(obj_precision) AS max_precision"))
+    demote = "rank = 'normal' AND obj_precision < max_precision"
     # append to an existing qualifier list: strip exactly the final ']'
     # (rtrim would eat the whole ']]' tail of nested arrays and corrupt
     # the JSON)
+    only_one = get_lit_sql_str(f"[{_DEPRECATION}]")
+    appended = get_lit_sql_str(f", {_DEPRECATION}]")
     replaced = {
         "qualifiers": f"CASE WHEN {demote} THEN CASE WHEN qualifiers = '' OR qualifiers IS NULL"
-        f" THEN '[{_DEPRECATION}]'"
-        f" ELSE concat(substring(qualifiers, 1, length(qualifiers) - 1), ', {_DEPRECATION}]') END"
+        f" THEN {only_one}"
+        f" ELSE concat(substring(qualifiers, 1, length(qualifiers) - 1), {appended}) END"
         " ELSE qualifiers END AS qualifiers",
         "rank": f"CASE WHEN {demote} THEN 'deprecated' ELSE rank END AS rank",
     }
-    names = ["component", "pred", *(c for c in claims.columns if c not in ("component", "pred"))]
-    others = claims.filter(f"({_IS_DATE}) IS NOT TRUE").selectExpr(*(f"`{c}`" for c in names))
-    dates = claims.filter(_IS_DATE).selectExpr(*(replaced.get(c, f"`{c}`") for c in names))
-    return others.union(dates)
+    # AQE keeps a hinted join's strategy; unhinted, this join's executed
+    # plan varied between runs (5 or 6 jobs on one input)
+    dates = dates.join(maxima.hint("shuffle_hash"), ["component", "pred"], "left").selectExpr(
+        *(replaced.get(c, f"`{c}`") for c in claims.columns)
+    )
+    return claims.filter(f"({_IS_DATE}) IS NOT TRUE").union(dates)
 
 
 def merge_terms(with_comp: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -156,7 +163,7 @@ def merge_terms(with_comp: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
 
     def first(kind: str) -> DataFrame:
         return (
-            with_comp.filter(f"kind = '{kind}'")
+            with_comp.filter(f"kind = {get_lit_sql_str(kind)}")
             .groupBy("component", "obj_lang")
             .agg(F.expr(f"min_by(obj_value, struct(subj, ord)) AS {kind}"))
         )

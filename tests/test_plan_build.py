@@ -115,8 +115,9 @@ def test_route_matches_python_first_match(spark):
 
 def test_merge_plan_build_starts_no_job(spark):
     """Building merge_component's plan starts no Spark job, with or
-    without the reference cap: fix_dates reads its maxima from a window,
-    so nothing is counted or collected while the plan is built."""
+    without the reference cap: fix_dates joins its maxima without a
+    size probe, so nothing is counted or collected while the plan is
+    built."""
     with_comp = _with_comp(spark)
     sc = spark.sparkContext
     try:
@@ -137,7 +138,7 @@ CALL_BUDGET = {
     "route": 18,
     "link": 206,
     "link_label_retry": 249,
-    "merge_component": 191,
+    "merge_component": 208,
 }
 
 

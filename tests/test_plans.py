@@ -76,21 +76,25 @@ def test_capped_merge_is_window_free_two_stage(spark):
     """ref_cap path: two HashAggregate stages (per-(key,salt) partial,
     then per-key merge), no Window/Sort-based aggregation anywhere —
     windows on the claim key would re-create the giant-component
-    single-reducer straggler the cap exists to avoid."""
+    single-reducer straggler the cap exists to avoid. The input holds
+    P569 claims, so fix_dates' date branch stays in the plan (with none,
+    the optimizer prunes it) and must be window-free too."""
     from pyspark.sql import functions as F
 
     from auth2wd_spark.operators.merge import merge_claims
 
+    is_date = F.col("id") < 10
     with_comp = spark.range(100).select(
         F.lit("C").alias("component"),
         F.concat(F.lit("s"), F.col("id").cast("string")).alias("subj"),
         F.col("id").alias("ord"),
         F.lit("claim").alias("kind"),
-        F.lit("P214").alias("pred"),
-        F.lit("extid").alias("obj_type"),
-        F.lit("v").alias("obj_value"),
+        F.when(is_date, "P569").otherwise("P214").alias("pred"),
+        F.when(is_date, "time").otherwise("extid").alias("obj_type"),
+        F.when(is_date, F.concat(F.lit("+19"), F.lpad(F.col("id").cast("string"), 2, "0"),
+                                 F.lit("-01-01T00:00:00Z"))).otherwise("v").alias("obj_value"),
         F.lit(None).cast("string").alias("obj_lang"),
-        F.lit(None).cast("int").alias("obj_precision"),
+        F.when(is_date, F.when(F.col("id") % 2 == 0, 9).otherwise(11)).alias("obj_precision"),
         F.lit("normal").alias("rank"),
         F.lit("").alias("qualifiers"),
         F.lit(True).alias("has_ref"),
@@ -100,9 +104,13 @@ def test_capped_merge_is_window_free_two_stage(spark):
         F.lit(None).cast("int").alias("fallback_property"),
         F.lit(None).cast("string").alias("fallback_text"),
     )
-    plan = _plan(merge_claims(with_comp, ref_cap=5))
+    claims = merge_claims(with_comp, ref_cap=5)
+    plan = _plan(claims)
     assert "Window" not in plan
+    assert "max_precision" in plan  # fix_dates' per-(component, pred) maxima
+    assert "ShuffledHashJoin" in plan  # hinted, so AQE keeps the join's strategy
     assert plan.count("HashAggregate") >= 4  # 2 stages × (partial + final)
+    assert claims.filter("rank = 'deprecated'").count() == 5  # the year-precision dates
 
 
 def test_kmeans_training_plan_shape(spark):

@@ -1,16 +1,17 @@
 """Count the py4j round trips the driver's main thread makes in one warm run.
 
-Builds the synthetic corpus (``corpus.generate.build_corpus``), writes it
-as parquet (so the dimension tables carry size statistics, as they do in
-kgbench), starts a session with ``session.build_session``, runs
-``run_pipeline`` + ``write_outputs`` once to warm up, and then once more
-with py4j's ``ClientServerConnection.send_command`` wrapped. Only calls
-made on the main thread that return within ``--fast-ms`` count: those
-are plan building and metadata calls, during which no Spark job runs
-(a call that blocks on a job takes longer). Each call is charged to the
-innermost ``auth2wd_spark`` frame on the stack.
+    python3 tools/py4j_calls.py
 
-    python3 tools/py4j_calls.py [--persons 400] [--noise 200] [--cores 2]
+The input is kgbench's ``person_graph`` workload at seed 3
+(``kgbench/inputs.py``), written as parquet. The tool starts a session
+with ``session.build_session`` at kgbench's core count, runs kgbench's
+``run_pipeline`` + ``write_outputs`` call once to warm up, and then once more
+with py4j's ``ClientServerConnection.send_command`` wrapped. Counted are
+the calls made on the main thread that return within ``FAST_S``: plan
+building and metadata calls, during which no Spark job runs (a call that
+blocks on a job takes longer). Each call is charged to the innermost
+``auth2wd_spark`` frame on the stack. The tool counts the checkout it
+sits in, so a copy placed in another checkout counts that one.
 
 Prints one line per function, most calls first, then the total: the
 counted calls and the milliseconds they took, then the slower calls and
@@ -19,7 +20,6 @@ theirs (Spark jobs, and the analysis of large plans).
 
 from __future__ import annotations
 
-import argparse
 import os
 import shutil
 import sys
@@ -32,27 +32,8 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 PACKAGE_DIR = os.path.join(ROOT, "auth2wd_spark") + os.sep
 
-
-def write_inputs(corpus: dict, out_dir: str) -> dict[str, str]:
-    """Each input table as one parquet file with its declared schema."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from auth2wd_spark import schemas
-
-    declared = {
-        "pages": schemas.PAGES,
-        "id_to_qid": schemas.ID_TO_QID,
-        "viaf_lookup": schemas.VIAF_LOOKUP,
-        "valid_gnd_ids": schemas.VALID_GND_IDS,
-    }
-    paths = {}
-    for name, rows in corpus.items():
-        path = os.path.join(out_dir, f"{name}.parquet")
-        pq.write_table(pa.Table.from_pylist(rows, schema=to_arrow_schema(declared[name])), path)
-        paths[name] = (path, declared[name])
-    return paths
+WORKLOAD, SEED = "person_graph", 3
+FAST_S = 0.020  # a faster call builds a plan or reads metadata
 
 
 def caller(frame) -> str:
@@ -69,12 +50,11 @@ def caller(frame) -> str:
 class CallCounter:
     """Counts fast main-thread ``send_command`` calls per caller while on."""
 
-    def __init__(self, fast_s: float):
+    def __init__(self):
         from py4j.clientserver import ClientServerConnection
 
         self.cls = ClientServerConnection
         self.original = ClientServerConnection.send_command
-        self.fast_s = fast_s
         self.calls: Counter[str] = Counter()
         self.seconds: Counter[str] = Counter()
         self.slow: Counter[str] = Counter()
@@ -91,7 +71,7 @@ class CallCounter:
             finally:
                 took = time.perf_counter() - t0
                 name = caller(sys._getframe(1))
-                if took < counter.fast_s:
+                if took < FAST_S:
                     counter.calls[name] += 1
                     counter.seconds[name] += took
                 else:
@@ -109,30 +89,24 @@ class CallCounter:
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--persons", type=int, default=400)
-    ap.add_argument("--noise", type=int, default=200, help="unroutable pages")
-    ap.add_argument("--cores", type=int, default=2)
-    ap.add_argument("--fast-ms", type=float, default=20.0)
-    args = ap.parse_args()
+    from kgbench.inputs import WORKLOADS, build_rows, write_inputs
+    from kgbench.run import CORES, read_inputs, run_untraced
 
-    from auth2wd_spark.corpus.generate import build_corpus
-    from auth2wd_spark.plans.pipeline import run_pipeline, write_outputs
     from auth2wd_spark.session import build_session, release_all_cached
 
     work = tempfile.mkdtemp(prefix="py4j-calls-")
     try:
         os.environ.setdefault("SPARK_DRIVER_MEMORY", "2g")
         os.environ.setdefault("SPARK_LOCAL_DIRS", os.path.join(work, "spark-local"))
-        paths = write_inputs(build_corpus(n_persons=args.persons, noise_pages=args.noise), work)
-        spark = build_session(app_name="py4j-calls", cpus=args.cores)
+        paths = write_inputs(build_rows(WORKLOADS[WORKLOAD], SEED), work)
+        spark = build_session(app_name="py4j-calls", cpus=CORES)
         spark.sparkContext.setLogLevel("ERROR")
-        inputs = [spark.read.schema(schema).parquet(path) for path, schema in paths.values()]
+        inputs = read_inputs(spark, paths)
 
-        write_outputs(run_pipeline(*inputs), os.path.join(work, "warm-up"))
+        run_untraced(inputs, os.path.join(work, "warm-up"))
         release_all_cached(spark)
-        with CallCounter(args.fast_ms / 1000) as counter:
-            write_outputs(run_pipeline(*inputs), os.path.join(work, "counted"))
+        with CallCounter() as counter:
+            run_untraced(inputs, os.path.join(work, "counted"))
         spark.stop()
     finally:
         shutil.rmtree(work, ignore_errors=True)
