@@ -65,8 +65,11 @@ def latest_snapshot(routed: DataFrame) -> DataFrame:
     skipped entirely. Re-crawled corpora pay it once, as they must.
     """
     keys = routed.groupBy("source", "record_id")
-    dup = keys.agg(F.expr("count(1) AS n")).filter("n > 1").limit(1).count()
-    if dup == 0:
+    # no LIMIT: a limit's generated code names a counter that is numbered
+    # anew in every run, so its classes would be compiled again each time
+    # (ARCHITECTURE.md, Generated code); NULL when nothing was routed
+    dup = keys.agg(F.expr("count(1) AS n")).selectExpr("max(n) > 1").collect()[0][0]
+    if not dup:
         return routed.selectExpr("source", "record_id", "url", "text", "lang", "warc_ts")
     return keys.agg(
         F.expr("max_by(struct(url, text, lang), warc_ts) AS s"), F.expr("max(warc_ts) AS warc_ts")

@@ -15,6 +15,16 @@ from pyspark.sql import SparkSession
 
 _SHIPPED: set[str] = set()
 
+# Compiled whole-stage-codegen classes the session keeps, looked up by
+# their source text. One warm-up run on kgbench's inputs (seed 3) compiles
+# 150 distinct sources on person_graph and 161 on crawl_recrawl (158 and 171
+# with stage ids in class names). Spark's default of 100, evicted in LRU
+# order, dropped every class before the next run asked for it again, so a
+# warm run compiled 155-167 classes, each on the driver before its stage
+# could start (ARCHITECTURE.md, Generated code). 1,000 holds six such runs:
+# room for the plans of other inputs and other queries in one session.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def package_zip_path() -> str:
     """Build (once) a zip of the auth2wd_spark package for --py-files/addPyFile."""
@@ -113,6 +123,13 @@ def build_session(app_name: str = "auth2wd-spark", cpus: int | str | None = None
         # process, the first time a wrapped call runs, so it must be set
         # here, when the session is built, and not on a running session.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # a static conf: a running session keeps the bound it was built with
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # adaptive execution numbers a query's codegen stages as it plans
+        # them, and the numbers of one query varied between runs; without
+        # the number in the class name, a stage's source is the same in
+        # every run and its class is reused
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     spark = builder.getOrCreate()
     ship_package(spark)

@@ -26,16 +26,11 @@ def read_fixture(name: str) -> str:
 
 @pytest.fixture(scope="session")
 def spark():
-    from pyspark.sql import SparkSession
+    """The product's session (``session.build_session``: call-site capture
+    off, generated classes reused between runs), with 8 shuffle partitions."""
+    from auth2wd_spark.session import build_session
 
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
-        .appName("auth2wd-spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
+    spark = build_session(app_name="auth2wd-spark-tests")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     yield spark
     spark.stop()

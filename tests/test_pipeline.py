@@ -5,7 +5,8 @@ from pyspark.sql import functions as F
 
 from auth2wd_spark import schemas
 from auth2wd_spark.corpus.generate import build_corpus
-from auth2wd_spark.plans.pipeline import PipelineConfig, run_pipeline
+from auth2wd_spark.plans.pipeline import PipelineConfig, run_pipeline, write_outputs
+from auth2wd_spark.session import release_all_cached
 
 
 @pytest.fixture(scope="module")
@@ -13,13 +14,22 @@ def corpus():
     return build_corpus(n_persons=30, noise_pages=10)
 
 
+def _inputs(spark, corpus):
+    """pages, id_to_qid, viaf_lookup and valid_gnd_ids as frames."""
+    return [
+        spark.createDataFrame(corpus[name], schema=schema)
+        for name, schema in (
+            ("pages", schemas.PAGES),
+            ("id_to_qid", schemas.ID_TO_QID),
+            ("viaf_lookup", schemas.VIAF_LOOKUP),
+            ("valid_gnd_ids", schemas.VALID_GND_IDS),
+        )
+    ]
+
+
 @pytest.fixture(scope="module")
 def tables(spark, corpus):
-    pages = spark.createDataFrame(corpus["pages"], schema=schemas.PAGES)
-    id_to_qid = spark.createDataFrame(corpus["id_to_qid"], schema=schemas.ID_TO_QID)
-    viaf_lookup = spark.createDataFrame(corpus["viaf_lookup"], schema=schemas.VIAF_LOOKUP)
-    valid_gnd = spark.createDataFrame(corpus["valid_gnd_ids"], schema=schemas.VALID_GND_IDS)
-    return run_pipeline(pages, id_to_qid, viaf_lookup, valid_gnd, PipelineConfig())
+    return run_pipeline(*_inputs(spark, corpus), PipelineConfig())
 
 
 def _component_of(tables, subj):
@@ -174,13 +184,7 @@ def test_salted_pipeline_output_identical(spark, corpus, tables):
     """salt_partitions > 0 changes only the physical repartition ahead of
     the merge groupBy — claims/labels/members must be byte-identical to the
     unsalted run (the hot-entity skew defense is a no-op semantically)."""
-    pages = spark.createDataFrame(corpus["pages"], schema=schemas.PAGES)
-    id_to_qid = spark.createDataFrame(corpus["id_to_qid"], schema=schemas.ID_TO_QID)
-    viaf_lookup = spark.createDataFrame(corpus["viaf_lookup"], schema=schemas.VIAF_LOOKUP)
-    valid_gnd = spark.createDataFrame(corpus["valid_gnd_ids"], schema=schemas.VALID_GND_IDS)
-    salted = run_pipeline(
-        pages, id_to_qid, viaf_lookup, valid_gnd, PipelineConfig(salt_partitions=8)
-    )
+    salted = run_pipeline(*_inputs(spark, corpus), PipelineConfig(salt_partitions=8))
 
     def canon_claims(t):
         return {
@@ -194,3 +198,24 @@ def test_salted_pipeline_output_identical(spark, corpus, tables):
         a = {tuple(r) for r in salted[name].collect()}
         b = {tuple(r) for r in tables[name].collect()}
         assert a == b, name
+
+
+def _compilations(spark) -> int:
+    """Generated classes compiled in this JVM so far (driver and local
+    executors share it)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_warm_run_compiles_nothing(spark, corpus, tmp_path):
+    """A second run on the same input reuses every class the first one
+    compiled: the session's class cache holds a whole run, and no plan
+    carries generated code that differs between runs."""
+    frames = _inputs(spark, corpus)
+    compiled = []
+    for run in range(2):
+        before = _compilations(spark)
+        write_outputs(run_pipeline(*frames), str(tmp_path / str(run)))
+        compiled.append(_compilations(spark) - before)
+        release_all_cached(spark)
+    assert compiled[1] == 0, f"classes compiled per run: {compiled}"

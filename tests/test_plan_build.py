@@ -17,7 +17,6 @@ from datetime import datetime
 import pyarrow as pa
 import pytest
 from py4j.clientserver import ClientServerConnection
-from pyspark.errors import utils as error_utils
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StringType, StructField, StructType
 
@@ -132,8 +131,8 @@ def test_merge_plan_build_starts_no_job(spark):
 
 
 # py4j round trips of each plan build, measured with call-site capture off
-# (as session.build_session sets it) and counted without py4j's
-# memory-release commands, which follow Python's garbage collection.
+# (the test session comes from session.build_session) and counted without
+# py4j's memory-release commands, which follow Python's garbage collection.
 CALL_BUDGET = {
     "route": 18,
     "link": 206,
@@ -160,8 +159,7 @@ def _calls(build) -> int:
 
 
 @pytest.mark.parametrize("plan", sorted(CALL_BUDGET))
-def test_plan_build_call_budget(spark, monkeypatch, plan):
-    monkeypatch.setattr(error_utils, "_enable_debugging_cache", False)
+def test_plan_build_call_budget(spark, plan):
     pages, raw, dims, with_comp = _pages(spark, [NOISE_URL]), _raw(spark), _dims(spark), _with_comp(spark)
     build = {
         "route": lambda: route(pages),

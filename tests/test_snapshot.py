@@ -25,15 +25,22 @@ GND_OLD = """<?xml version="1.0"?><rdf:RDF xmlns:rdf="http://www.w3.org/1999/02/
 GND_NEW = GND_OLD.replace("1900", "1901")
 
 
+def _folds(snap) -> bool:
+    """Whether the snapshot's plan aggregates pages (the payload fold)."""
+    return "max_by" in snap._jdf.queryExecution().analyzed().toString()
+
+
 def test_latest_crawl_wins(spark):
     url = "https://d-nb.info/gnd/100000099/about/lds.rdf"
     pages = spark.createDataFrame(
         [_page(url, GND_OLD, 1), _page(url, GND_NEW, 30), _page(url, GND_OLD, 10)],
         schema=schemas.PAGES,
     )
-    snap = latest_snapshot(route(pages)).collect()
-    assert len(snap) == 1
-    assert "1901" in snap[0]["text"]
+    snap = latest_snapshot(route(pages))
+    assert _folds(snap)
+    rows = snap.collect()
+    assert len(rows) == 1
+    assert "1901" in rows[0]["text"]
 
 
 def test_unique_keys_skip_fold(spark):
@@ -45,5 +52,15 @@ def test_unique_keys_skip_fold(spark):
         schema=schemas.PAGES,
     )
     snap = latest_snapshot(route(pages))
+    assert not _folds(snap)
     assert snap.count() == 2
     assert set(snap.columns) == {"source", "record_id", "url", "text", "lang", "warc_ts"}
+
+
+def test_nothing_routed_skips_fold(spark):
+    pages = spark.createDataFrame(
+        [_page("https://example.org/noise", GND_OLD, 1)], schema=schemas.PAGES
+    )
+    snap = latest_snapshot(route(pages))
+    assert not _folds(snap)
+    assert snap.count() == 0
