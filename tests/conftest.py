@@ -27,10 +27,15 @@ def read_fixture(name: str) -> str:
 @pytest.fixture(scope="session")
 def spark():
     """The product's session (``session.build_session``: call-site capture
-    off, generated classes reused between runs), with 8 shuffle partitions."""
+    off, generated classes reused between runs), with 8 cores and an 8 GB
+    driver unless SPARK_GRAFT_CPUS or SPARK_DRIVER_MEMORY say otherwise,
+    and 8 shuffle partitions."""
     from auth2wd_spark.session import build_session
 
-    spark = build_session(app_name="auth2wd-spark-tests")
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "8g")
+    spark = build_session(
+        app_name="auth2wd-spark-tests", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8")
+    )
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     yield spark
     spark.stop()

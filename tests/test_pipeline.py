@@ -200,22 +200,18 @@ def test_salted_pipeline_output_identical(spark, corpus, tables):
         assert a == b, name
 
 
-def _compilations(spark) -> int:
-    """Generated classes compiled in this JVM so far (driver and local
-    executors share it)."""
-    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
-    return metrics.METRIC_COMPILATION_TIME().getCount()
-
-
 def test_warm_run_compiles_nothing(spark, corpus, tmp_path):
     """A second run on the same input reuses every class the first one
     compiled: the session's class cache holds a whole run, and no plan
     carries generated code that differs between runs."""
+    # Janino compilations in this JVM (driver and local executors share it)
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compilations = metrics.METRIC_COMPILATION_TIME()
     frames = _inputs(spark, corpus)
     compiled = []
     for run in range(2):
-        before = _compilations(spark)
+        before = compilations.getCount()
         write_outputs(run_pipeline(*frames), str(tmp_path / str(run)))
-        compiled.append(_compilations(spark) - before)
+        compiled.append(compilations.getCount() - before)
         release_all_cached(spark)
     assert compiled[1] == 0, f"classes compiled per run: {compiled}"

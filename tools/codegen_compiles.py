@@ -1,87 +1,58 @@
 """Count the generated classes Spark compiles in each warm run.
 
-    python3 tools/codegen_compiles.py [--workload person_graph] [--seed 3]
-                                      [--runs 3] [--sources]
+    python3 tools/codegen_compiles.py [--sources]
 
-The input is a kgbench workload (``kgbench/inputs.py``), written as
-parquet. The tool starts a session with ``session.build_session`` at
-kgbench's core count and calls kgbench's ``run_pipeline`` +
-``write_outputs`` once to warm up and then ``--runs`` more times. Around
-each call it reads the count of Janino compilations from
-``CodegenMetrics.METRIC_COMPILATION_TIME``. A class whose source is
-already in Spark's compiled-class cache is not compiled again, so a warm
-run that reuses every class compiles 0. The tool counts the checkout it
-sits in, so a copy placed in another checkout counts that one.
+For each kgbench workload at seed 3, in a new JVM (``kgbench_session``),
+the tool calls kgbench's ``run_pipeline`` + ``write_outputs`` once to warm
+up and then ``RUNS`` more times. Around each call it reads the count of
+Janino compilations from ``CodegenMetrics.METRIC_COMPILATION_TIME``. A
+class whose source is already in Spark's compiled-class cache is not
+compiled again, so the warm-up's count is the run's distinct sources, and
+a warm run that reuses every class compiles 0.
 
-With ``--sources``, the runs after the warm-up log
+With ``--sources``, the warm runs log
 ``org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator`` at
 DEBUG: Spark logs the formatted source of each class it compiles (a cache
 miss) to the JVM's stderr; a class found in the cache is not logged.
 
-Prints one line per run: its kind and the classes it compiled.
+Prints one line per run: the workload, the run and the classes it compiled.
 """
 
 from __future__ import annotations
 
 import argparse
-import os
-import shutil
-import sys
-import tempfile
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+from kgbench_session import kgbench_session
 
+SEED, RUNS = 3, 3
 CODEGEN_LOGGER = "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator"
 
 
-def compilations(spark) -> int:
-    """Classes compiled since the JVM started."""
-    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
-    return metrics.METRIC_COMPILATION_TIME().getCount()
+def main() -> None:
+    from kgbench.inputs import WORKLOADS
 
+    from auth2wd_spark.session import release_all_cached
 
-def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--workload", default="person_graph")
-    ap.add_argument("--seed", type=int, default=3)
-    ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--sources", action="store_true")
-    args = ap.parse_args(argv)
-
-    from kgbench.inputs import WORKLOADS, build_rows, write_inputs
-    from kgbench.run import CORES, read_inputs, run_untraced
-
-    from auth2wd_spark.session import build_session, release_all_cached
-
-    work = tempfile.mkdtemp(prefix="codegen-compiles-")
-    try:
-        os.environ.setdefault("SPARK_DRIVER_MEMORY", "2g")
-        os.environ.setdefault("SPARK_LOCAL_DIRS", os.path.join(work, "spark-local"))
-        # no progress bar between the logged sources
-        os.environ.setdefault(
-            "PYSPARK_SUBMIT_ARGS", "--conf spark.ui.showConsoleProgress=false pyspark-shell"
-        )
-        paths = write_inputs(build_rows(WORKLOADS[args.workload], args.seed), work)
-        spark = build_session(app_name="codegen-compiles", cpus=CORES)
-        spark.sparkContext.setLogLevel("ERROR")
-        inputs = read_inputs(spark, paths)
-        print(f"{'run':>8}  {'classes':>7}")
-        for run in range(args.runs + 1):
-            if args.sources and run == 1:
-                jvm = spark.sparkContext._jvm
-                jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
-                    CODEGEN_LOGGER, jvm.org.apache.logging.log4j.Level.DEBUG
-                )
-            before = compilations(spark)
-            run_untraced(inputs, os.path.join(work, f"out-{run}"))
-            compiled = compilations(spark) - before
-            release_all_cached(spark)
-            kind = f"warm {run}" if run else "warm-up"
-            print(f"{kind:>8}  {compiled:7d}", flush=True)
-        spark.stop()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    ap.add_argument("--sources", action="store_true", help="log each compiled source")
+    sources = ap.parse_args().sources
+    print(f"{'workload':<14}  {'run':>7}  {'classes':>7}")
+    for workload in WORKLOADS:
+        with kgbench_session(workload, SEED) as (spark, run):
+            jvm = spark.sparkContext._jvm
+            metrics = jvm.org.apache.spark.metrics.source.CodegenMetrics
+            compilations = metrics.METRIC_COMPILATION_TIME()
+            for n in range(RUNS + 1):
+                if sources and n == 1:
+                    jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+                        CODEGEN_LOGGER, jvm.org.apache.logging.log4j.Level.DEBUG
+                    )
+                before = compilations.getCount()
+                run()
+                compiled = compilations.getCount() - before
+                release_all_cached(spark)
+                kind = f"warm {n}" if n else "warm-up"
+                print(f"{workload:<14}  {kind:>7}  {compiled:7d}", flush=True)
 
 
 if __name__ == "__main__":

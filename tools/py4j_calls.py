@@ -2,16 +2,14 @@
 
     python3 tools/py4j_calls.py
 
-The input is kgbench's ``person_graph`` workload at seed 3
-(``kgbench/inputs.py``), written as parquet. The tool starts a session
-with ``session.build_session`` at kgbench's core count, runs kgbench's
-``run_pipeline`` + ``write_outputs`` call once to warm up, and then once more
-with py4j's ``ClientServerConnection.send_command`` wrapped. Counted are
+The input is kgbench's ``person_graph`` workload at seed 3, in a kgbench
+session (``kgbench_session``). The tool runs kgbench's ``run_pipeline`` +
+``write_outputs`` call once to warm up, and then once more with py4j's
+``ClientServerConnection.send_command`` wrapped. Counted are
 the calls made on the main thread that return within ``FAST_S``: plan
 building and metadata calls, during which no Spark job runs (a call that
 blocks on a job takes longer). Each call is charged to the innermost
-``auth2wd_spark`` frame on the stack. The tool counts the checkout it
-sits in, so a copy placed in another checkout counts that one.
+``auth2wd_spark`` frame on the stack.
 
 Prints one line per function, most calls first, then the total: the
 counted calls and the milliseconds they took, then the slower calls and
@@ -21,15 +19,13 @@ theirs (Spark jobs, and the analysis of large plans).
 from __future__ import annotations
 
 import os
-import shutil
 import sys
-import tempfile
 import threading
 import time
 from collections import Counter
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+from kgbench_session import ROOT, kgbench_session
+
 PACKAGE_DIR = os.path.join(ROOT, "auth2wd_spark") + os.sep
 
 WORKLOAD, SEED = "person_graph", 3
@@ -89,27 +85,13 @@ class CallCounter:
 
 
 def main() -> None:
-    from kgbench.inputs import WORKLOADS, build_rows, write_inputs
-    from kgbench.run import CORES, read_inputs, run_untraced
+    from auth2wd_spark.session import release_all_cached
 
-    from auth2wd_spark.session import build_session, release_all_cached
-
-    work = tempfile.mkdtemp(prefix="py4j-calls-")
-    try:
-        os.environ.setdefault("SPARK_DRIVER_MEMORY", "2g")
-        os.environ.setdefault("SPARK_LOCAL_DIRS", os.path.join(work, "spark-local"))
-        paths = write_inputs(build_rows(WORKLOADS[WORKLOAD], SEED), work)
-        spark = build_session(app_name="py4j-calls", cpus=CORES)
-        spark.sparkContext.setLogLevel("ERROR")
-        inputs = read_inputs(spark, paths)
-
-        run_untraced(inputs, os.path.join(work, "warm-up"))
+    with kgbench_session(WORKLOAD, SEED) as (spark, run):
+        run()  # warm-up
         release_all_cached(spark)
         with CallCounter() as counter:
-            run_untraced(inputs, os.path.join(work, "counted"))
-        spark.stop()
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+            run()
 
     def row(calls, ms, slow, slow_ms, name):
         print(f"{calls:6d}  {ms:8.1f}  {slow:6d}  {slow_ms:8.1f}  {name}")
