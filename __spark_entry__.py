@@ -259,8 +259,8 @@ def q_cc_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming-analog sessionization: 30-min-gap sessions per user via
-    lag + cumulative sum windows (the batch shape of the streaming op)."""
+    """Sessionization: 30-min-gap sessions per user via lag + cumulative
+    sum windows."""
     e = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # fractional epoch seconds (µs-exact); TIMESTAMP_NTZ needs the 2-step cast

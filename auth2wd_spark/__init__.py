@@ -6,7 +6,7 @@ authority-control-to-Wikidata pipeline (magnusmanske/auth2wd, see
 
     pages (url, warc_ts, html, text, lang)
       → route (url regex → source)                      [JVM-side regex]
-      → extract (vectorized parse UDF → triples)        [mapInPandas]
+      → extract (vectorized parse UDF → triples)        [mapInArrow]
       → link (broadcast joins vs id→QID dims)           [DataFrame joins]
       → canonicalize (connected components + merge)     [iterative joins]
       → materialize (partitioned parquet + lineage)

@@ -433,18 +433,3 @@ def distributed_corpus(
         "valid_gnd_ids": valid_gnd,
     }
 
-
-def write_corpus(out_dir: str, **kwargs) -> dict[str, str]:
-    """Write the corpus as parquet files (pyarrow; no Spark needed)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    corpus = build_corpus(**kwargs)
-    os.makedirs(out_dir, exist_ok=True)
-    paths = {}
-    for name, rows in corpus.items():
-        table = pa.Table.from_pylist(rows)
-        path = os.path.join(out_dir, f"{name}.parquet")
-        pq.write_table(table, path)
-        paths[name] = path
-    return paths

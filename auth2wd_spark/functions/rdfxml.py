@@ -22,15 +22,12 @@ from typing import NamedTuple
 
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 XML_LANG = "{http://www.w3.org/XML/1998/namespace}lang"
-XML_BASE = "{http://www.w3.org/XML/1998/namespace}base"
 
 _RDF_ABOUT = f"{{{RDF_NS}}}about"
 _RDF_RESOURCE = f"{{{RDF_NS}}}resource"
 _RDF_NODEID = f"{{{RDF_NS}}}nodeID"
 _RDF_ID = f"{{{RDF_NS}}}ID"
 _RDF_PARSETYPE = f"{{{RDF_NS}}}parseType"
-_RDF_DATATYPE = f"{{{RDF_NS}}}datatype"
-_RDF_DESCRIPTION = f"{{{RDF_NS}}}Description"
 _RDF_RDF = f"{{{RDF_NS}}}RDF"
 _RDF_LI = f"{{{RDF_NS}}}li"
 _RDF_TYPE = f"{RDF_NS}type"

@@ -190,9 +190,7 @@ def hll_registers(
 
     Physical shape mirrors cms_sketch: the groupBy(bucket).max state is
     bounded by 2^p cells no matter how many values stream through, so
-    map-side combine collapses each task before any shuffle — and the
-    same bound is what makes this a legal complete-mode STREAMING
-    aggregation (streaming/sketch_stream.hll_registers_stream). No
+    map-side combine collapses each task before any shuffle. No
     distinct() anywhere: duplicates cannot move a max.
     """
     if not 7 <= p <= 13:

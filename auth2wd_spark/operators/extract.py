@@ -63,6 +63,10 @@ def latest_snapshot(routed: DataFrame) -> DataFrame:
     the NARROW key columns only (cheap shuffle of ids); when every key is
     already unique — common for curated snapshots — the payload shuffle is
     skipped entirely. Re-crawled corpora pay it once, as they must.
+
+    Different URLs can share one key (``http://viaf.org/viaf/1`` and
+    ``https://www.viaf.org/viaf/1``); when they were crawled at the same
+    instant the greater URL wins, so the pick never depends on row order.
     """
     keys = routed.groupBy("source", "record_id")
     # no LIMIT: a limit's generated code names a counter that is numbered
@@ -72,7 +76,8 @@ def latest_snapshot(routed: DataFrame) -> DataFrame:
     if not dup:
         return routed.selectExpr("source", "record_id", "url", "text", "lang", "warc_ts")
     return keys.agg(
-        F.expr("max_by(struct(url, text, lang), warc_ts) AS s"), F.expr("max(warc_ts) AS warc_ts")
+        F.expr("max_by(struct(url, text, lang), struct(warc_ts, url)) AS s"),
+        F.expr("max(warc_ts) AS warc_ts"),
     ).selectExpr("source", "record_id", "s.url", "s.text", "s.lang", "warc_ts")
 
 

@@ -203,7 +203,7 @@ def test_hll_duplicates_cannot_move_registers(spark):
 
 def test_hll_state_is_bounded(spark):
     """≤ 2^p register rows no matter the vocabulary — the property that
-    makes both the 100 TB pass and the streaming mode legal."""
+    keeps the 100 TB pass's aggregation state small."""
     from auth2wd_spark.mlops.sketch import hll_registers
 
     d = _docs(spark, [(i, " ".join(f"tok{j}" for j in range(i * 50, i * 50 + 50)))

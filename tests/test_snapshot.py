@@ -64,3 +64,18 @@ def test_nothing_routed_skips_fold(spark):
     snap = latest_snapshot(route(pages))
     assert not _folds(snap)
     assert snap.count() == 0
+
+
+def test_equal_timestamps_pick_by_url(spark):
+    """Two URLs route to one key and were crawled at the same instant: the
+    pick must depend on the rows, not on the order they arrive in."""
+    http = _page("http://viaf.org/viaf/1", "http page", 5)
+    https = _page("https://www.viaf.org/viaf/1", "https page", 5)
+    picks = []
+    for rows in ([http, https], [https, http]):
+        pages = spark.createDataFrame(rows, schema=schemas.PAGES).coalesce(1)
+        snap = latest_snapshot(route(pages))
+        assert _folds(snap)
+        picks.append(snap.collect())
+    assert picks[0] == picks[1]
+    assert [r["url"] for r in picks[0]] == ["https://www.viaf.org/viaf/1"]
