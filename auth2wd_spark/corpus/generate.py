@@ -208,24 +208,9 @@ def synthetic_corpus(
     ``hot_fraction`` of persons all sameAs-link person 0's VIAF cluster —
     the hot-entity skew cluster that exercises salting / skew joins.
     """
-    rng = random.Random(seed)
     pages: list[dict] = []
-    id_to_qid: list[dict] = list(GOLDEN_ID_TO_QID)
-    viaf_lookup: list[dict] = list(GOLDEN_VIAF_LOOKUP)
-    valid_gnd: list[dict] = list(GOLDEN_VALID_GND)
-
+    id_to_qid, viaf_lookup, valid_gnd = static_dims()
     hot_n = max(1, int(n_persons * hot_fraction))
-    ts = 10_000
-
-    # occupation + country dims
-    for k, occ in enumerate(OCCUPATION_POOL):
-        id_to_qid.append(
-            {"property": 227, "id": occ, "qid": f"Q8{k:06d}", "label_en": f"occupation{k}", "p31": "Q28640"}
-        )
-        valid_gnd.append({"gnd_id": occ, "valid": True})
-    for code, qid in COUNTRIES:
-        if not any(r["property"] == 297 and r["id"] == code for r in id_to_qid):
-            id_to_qid.append({"property": 297, "id": code, "qid": qid, "label_en": code, "p31": "Q6256"})
 
     for i in range(n_persons):
         pages.extend(person_pages(i, hot_n))
@@ -238,6 +223,23 @@ def synthetic_corpus(
         pages.append(noise_page(k))
 
     return pages, id_to_qid, viaf_lookup, valid_gnd
+
+
+def static_dims() -> tuple[list[dict], list[dict], list[dict]]:
+    """The dimension rows that do not depend on any person (pure; shared
+    by the list and the distributed generators): the golden rows, the
+    occupations' GND ids and the countries' ISO codes."""
+    id_to_qid = list(GOLDEN_ID_TO_QID)
+    valid_gnd = list(GOLDEN_VALID_GND)
+    for k, occ in enumerate(OCCUPATION_POOL):
+        id_to_qid.append(
+            {"property": 227, "id": occ, "qid": f"Q8{k:06d}", "label_en": f"occupation{k}", "p31": "Q28640"}
+        )
+        valid_gnd.append({"gnd_id": occ, "valid": True})
+    for code, qid in COUNTRIES:
+        if not any(r["property"] == 297 and r["id"] == code for r in id_to_qid):
+            id_to_qid.append({"property": 297, "id": code, "qid": qid, "label_en": code, "p31": "Q6256"})
+    return id_to_qid, list(GOLDEN_VIAF_LOOKUP), valid_gnd
 
 
 def person_pages(i: int, hot_n: int) -> list[dict]:
@@ -412,19 +414,15 @@ def distributed_corpus(
 
         return gen
 
-    static_id = list(GOLDEN_ID_TO_QID)
-    for k, occ in enumerate(OCCUPATION_POOL):
-        static_id.append(
-            {"property": 227, "id": occ, "qid": f"Q8{k:06d}", "label_en": f"occupation{k}", "p31": "Q28640"}
-        )
+    static_id, static_viaf, static_gnd = static_dims()
     id_to_qid = idx.mapInPandas(gen_dims(0), schema=schemas.ID_TO_QID).unionByName(
         spark.createDataFrame(static_id, schema=schemas.ID_TO_QID)
     )
     viaf_lookup = idx.mapInPandas(gen_dims(1), schema=schemas.VIAF_LOOKUP).unionByName(
-        spark.createDataFrame(GOLDEN_VIAF_LOOKUP, schema=schemas.VIAF_LOOKUP)
+        spark.createDataFrame(static_viaf, schema=schemas.VIAF_LOOKUP)
     )
     valid_gnd = idx.mapInPandas(gen_dims(2), schema=schemas.VALID_GND_IDS).unionByName(
-        spark.createDataFrame(GOLDEN_VALID_GND, schema=schemas.VALID_GND_IDS)
+        spark.createDataFrame(static_gnd, schema=schemas.VALID_GND_IDS)
     )
     return {
         "pages": pages,

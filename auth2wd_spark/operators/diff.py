@@ -19,7 +19,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-CLAIM_KEY = ["component", "pred", "obj_type", "obj_value", "obj_lang", "obj_precision"]
+from .merge import QUAL_KEY
+
+# merge's claim identity: main snak + qualifiers, P225 ignoring them; a
+# base claim's NULL qualifiers read as none, like the pipeline's ''
+CLAIM_KEY = ["component", "pred", "obj_type", "obj_value", "obj_lang", "obj_precision", "qual_key"]
 
 
 def fix_images(claims: DataFrame, base_claims: DataFrame) -> DataFrame:
@@ -33,13 +37,17 @@ def fix_images(claims: DataFrame, base_claims: DataFrame) -> DataFrame:
     return keep.filter(~(p4765 & F.col("_has_p18").isNotNull())).drop("_has_p18")
 
 
-def _key_condition(left: DataFrame, right: DataFrame):
-    """Null-safe claim-key equality (obj_lang/obj_precision are nullable)."""
+def _match_base(claims: DataFrame, base_claims: DataFrame, how: str) -> DataFrame:
+    """Claims joined with the base's claim keys (null-safe: obj_lang and
+    obj_precision are nullable) by a `left_anti` or `left_semi` join."""
+    qual_key = f"coalesce({QUAL_KEY}, '') AS qual_key"
+    keyed = claims.selectExpr("*", qual_key)
+    base_keys = base_claims.selectExpr(*CLAIM_KEY[:-1], qual_key).distinct()
     cond = None
     for c in CLAIM_KEY:
-        piece = left[c].eqNullSafe(right[c])
+        piece = keyed[c].eqNullSafe(base_keys[c])
         cond = piece if cond is None else cond & piece
-    return cond
+    return keyed.join(base_keys, cond, how).drop("qual_key")
 
 
 def merge_diff(claims: DataFrame, base_claims: DataFrame) -> DataFrame:
@@ -47,8 +55,7 @@ def merge_diff(claims: DataFrame, base_claims: DataFrame) -> DataFrame:
     anti-join). Reference semantics: a claim matching an existing base
     statement (same snak + qualifiers) is not 'added' even when it brought
     new references — reference changes surface as altered, not added."""
-    base_keys = base_claims.select(*CLAIM_KEY).distinct()
-    return claims.join(base_keys, _key_condition(claims, base_keys), "left_anti")
+    return _match_base(claims, base_claims, "left_anti")
 
 
 def merge_with_base(claims: DataFrame, base_claims: DataFrame) -> dict[str, DataFrame]:
@@ -56,8 +63,5 @@ def merge_with_base(claims: DataFrame, base_claims: DataFrame) -> dict[str, Data
     merged = fix_images(claims, base_claims)
     added = merge_diff(merged, base_claims)
     # altered = base statements that gained references from the merge
-    base_keys = base_claims.select(*CLAIM_KEY).distinct()
-    ref_gain = merged.join(base_keys, _key_condition(merged, base_keys), "left_semi").filter(
-        F.size(F.col("references")) > 0
-    )
+    ref_gain = _match_base(merged, base_claims, "left_semi").filter(F.size(F.col("references")) > 0)
     return {"merged": merged, "added_statements": added, "altered_statements": ref_gain}

@@ -20,7 +20,7 @@ from pyspark.sql.utils import get_lit_sql_str
 
 from ..functions.extid import do_not_use_external_url, subj_key
 from ..schemas import RAW
-from ..sources.registry import PARSERS, ROUTES
+from ..sources.registry import PARSERS, ROUTES, parse_record
 
 
 # CASE tests its branches in order, so the first matching route wins
@@ -57,12 +57,14 @@ def route(pages: DataFrame) -> DataFrame:
 def latest_snapshot(routed: DataFrame) -> DataFrame:
     """One row per (source, record_id): the latest crawl snapshot wins.
 
-    The fold itself is a max_by hash aggregation (partial map-side
-    combine) — but it shuffles full page payloads, which is the single
-    most expensive move in the pipeline. So first probe for duplicates on
-    the NARROW key columns only (cheap shuffle of ids); when every key is
-    already unique — common for curated snapshots — the payload shuffle is
-    skipped entirely. Re-crawled corpora pay it once, as they must.
+    The fold is a max_by aggregation with a partial map-side combine; on
+    Spark 4.1 max_by over string values plans as a SortAggregate, so each
+    side of its shuffle sorts the rows by key. It shuffles full page
+    payloads, the single most expensive move in the pipeline. So first
+    probe for duplicates on the NARROW key columns only (cheap shuffle of
+    ids); when every key is already unique — common for curated snapshots
+    — the payload shuffle is skipped entirely. Re-crawled corpora pay it
+    once, as they must.
 
     Different URLs can share one key (``http://viaf.org/viaf/1`` and
     ``https://www.viaf.org/viaf/1``); when they were crawled at the same
@@ -96,85 +98,48 @@ def attach_secondary_bodies(records: DataFrame) -> DataFrame:
     ).drop("x_record_id")
 
 
-# column order of the output tuples — must match RAW
-_RAW_NAMES = [f.name for f in RAW.fields]
-
 _NO_RESCUE_SOURCES = ("worldcat", "inaturalist", "ncbi", "gbif", "pubchem")
 
 
 def _record_rows(
     source: str, record_id: str, url: str, text: str, extra: str | None
-) -> list[tuple]:
-    """Parse one record → output tuples in RAW column order.
+) -> list[dict]:
+    """Parse one record → its RAW rows: the builder's own row dicts,
+    finished in place and keyed by RAW column name (a missing key is NULL).
 
-    Tuple-based (not dict-based) on purpose: the extraction stage emits
-    ~10 rows × 21 columns per page, and columnar/tuple assembly is what
-    keeps the Arrow batch build from dominating the whole stage.
+    On the Arrow path the batch build costs about as much from these
+    dicts as from positional tuples (ARCHITECTURE.md, "Arrow batch
+    assembly"), so the record keeps one form from parser to batch.
     """
-    parser = PARSERS.get(source)
-    if parser is None or text is None:
+    parsed = None if text is None else parse_record(source, record_id, text, extra)
+    if parsed is None:
         return []
-    try:
-        eff_id, b = parser.parse(record_id, text, extra)
-    except Exception:
-        return []
-    subj = subj_key(parser.property, eff_id)
+    eff_id, b = parsed
+    parser = PARSERS[source]
+    record = {
+        "subj": subj_key(parser.property, eff_id),
+        "src_property": parser.property,
+        "src_id": eff_id,
+        "src_url": url,
+    }
     rescues = source not in _NO_RESCUE_SOURCES
-    prop = parser.property
-    out = []
     for r in b.rows:
         kind = r["kind"]
-        # defaults (RAW order):
-        # subj kind pred obj_type obj_value obj_lang obj_precision rank
-        # qualifiers has_ref needs_gnd_check cand_kind cand_property cand_id
-        # fallback_property fallback_text rescue src_property src_id src_url ord
         if kind == "claim":
             quals = r["qualifiers"]
-            out.append(
-                (
-                    subj, kind, r["pred"], r["obj_type"], r["obj_value"],
-                    r["obj_lang"], r["obj_precision"], r["rank"],
-                    json.dumps([list(q) for q in quals]) if quals else "",
-                    bool(r["has_ref"]), bool(r.get("needs_gnd_check")),
-                    None, None, None, None, None, None,
-                    prop, eff_id, url, r["ord"],
-                )
-            )
+            r["qualifiers"] = json.dumps([list(q) for q in quals]) if quals else ""
         elif kind == "candidate":
-            fb = r.get("fallback_text")
+            r["qualifiers"] = ""
+            fb = r["fallback_text"]
             if fb is not None and do_not_use_external_url(fb):
-                fb = None  # denylisted fallback never becomes prop_text
-            out.append(
-                (
-                    subj, kind, r["pred"], None, None, None, None, None, "",
-                    bool(r["has_ref"]), None,
-                    r["cand_kind"], r["cand_property"], r["cand_id"],
-                    r.get("fallback_property"), fb, None,
-                    prop, eff_id, url, r["ord"],
-                )
-            )
+                r["fallback_text"] = None  # denylisted fallback never becomes prop_text
         elif kind == "prop_text":
-            out.append(
-                (
-                    subj, kind, None, None, None, None, None, None, None,
-                    # a later rescue claim inherits the parser's per-property
-                    # reference policy (e.g. GND never references P27)
-                    parser.ref_for_property(r["fallback_property"]), None,
-                    None, None, None,
-                    r["fallback_property"], r["fallback_text"], rescues,
-                    prop, eff_id, url, r["ord"],
-                )
-            )
-        else:  # label | alias | description
-            out.append(
-                (
-                    subj, kind, None, None, r["obj_value"], r["obj_lang"],
-                    None, None, None, None, None,
-                    None, None, None, None, None, None,
-                    prop, eff_id, url, r["ord"],
-                )
-            )
-    return out
+            # a later rescue claim inherits the parser's per-property
+            # reference policy (e.g. GND never references P27)
+            r["has_ref"] = parser.ref_for_property(r["fallback_property"])
+            r["rescue"] = rescues
+        r.update(record)
+    return b.rows
 
 
 def extract(records: DataFrame) -> DataFrame:
@@ -183,11 +148,9 @@ def extract(records: DataFrame) -> DataFrame:
     Round 6: ``mapInArrow`` instead of ``mapInPandas`` — the parse emits
     ~10 rows × 21 columns per page, and the pandas path paid a
     ``DataFrame.from_records`` object frame plus Spark's pandas→Arrow
-    conversion per batch. Building the Arrow record batch directly from
-    per-column lists skips both (measured: parse noop 3.8–5.2 s →
-    3.3–3.5 s at the sf0.1 bench corpus; output verified row-identical
-    via two-sided exceptAll). The parse kernel (_record_rows) is
-    unchanged.
+    conversion per batch. Building the Arrow record batch directly skips
+    both (measured: parse noop 3.8–5.2 s → 3.3–3.5 s at the sf0.1 bench
+    corpus; output verified row-identical via two-sided exceptAll).
     """
     cols = ["source", "record_id", "url", "text", "extra_text"]
 
@@ -195,23 +158,20 @@ def extract(records: DataFrame) -> DataFrame:
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        schema = to_arrow_schema(RAW)
-        ncols = len(_RAW_NAMES)
+        # one struct array converts every row dict in C++, reading each RAW
+        # column by name (a missing key is NULL)
+        raw_type = pa.struct(to_arrow_schema(RAW))
         for batch in batches:
             names = batch.schema.names
             ix = [names.index(c) for c in cols]
-            rows: list[tuple] = []
+            rows: list[dict] = []
             # .to_pylist() once per column: plain-object iteration, no
             # per-element boxing
             for source, record_id, url, text, extra in zip(
                 *[batch.column(i).to_pylist() for i in ix]
             ):
                 rows.extend(_record_rows(source, record_id, url, text, extra))
-            arrays = [
-                pa.array([r[i] for r in rows], type=schema.field(i).type)
-                for i in range(ncols)
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, schema=schema)
+            yield pa.RecordBatch.from_struct_array(pa.array(rows, type=raw_type))
 
     return records.selectExpr(*cols).mapInArrow(parse_batches, schema=RAW)
 

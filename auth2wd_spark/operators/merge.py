@@ -45,7 +45,7 @@ _REF = (
     "'src_id', src_id) END"
 )
 # P225 merges ignoring qualifiers (ItemMerger properties_ignore_qualifier_match)
-_QUAL_KEY = "CASE WHEN pred = 'P225' THEN '' ELSE qualifiers END"
+QUAL_KEY = "CASE WHEN pred = 'P225' THEN '' ELSE qualifiers END"
 
 _CLAIM_KEY = ("component", "pred", "obj_type", "obj_value", "obj_lang", "obj_precision", "qual_key")
 _ANY_DEPRECATED = "max(CASE WHEN rank = 'deprecated' THEN 1 ELSE 0 END)"
@@ -70,7 +70,7 @@ def merge_claims(with_comp: DataFrame, ref_cap: int | None = None) -> DataFrame:
     always within the union of per-salt smallest.
     """
     keyed = with_comp.filter("kind = 'claim'").selectExpr(
-        "*", f"{_REF} AS ref", f"{_QUAL_KEY} AS qual_key"
+        "*", f"{_REF} AS ref", f"{QUAL_KEY} AS qual_key"
     )
     if ref_cap is None:
         aggs = (
@@ -152,10 +152,12 @@ def fix_dates(claims: DataFrame) -> DataFrame:
 def merge_terms(with_comp: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """labels (first per language), aliases (distinct, != label), descriptions.
 
-    First-wins is a ``min_by(value, (subj, ord))`` HASH aggregation, not a
+    First-wins is a ``min_by(value, (subj, ord))`` aggregation, not a
     row_number window: the window sorts every (component, lang) partition
     on one reducer, so a pathological giant component degenerates to a
-    single task, while min_by combines map-side and never sorts. The alias
+    single task, while min_by combines map-side first. On Spark 4.1
+    min_by over a string value plans as a SortAggregate, so both the
+    partial and the final aggregation sort their rows by key. The alias
     pool is simply ALL label and alias rows minus the winning label value
     — identical to the old "rank > 1" set because duplicates of the
     winning value were filtered by the != label predicate anyway.

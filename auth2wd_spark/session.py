@@ -29,25 +29,29 @@ CODEGEN_CACHE_ENTRIES = 1000
 def package_zip_path() -> str:
     """Build (once) a zip of the auth2wd_spark package for --py-files/addPyFile."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    parent = os.path.dirname(pkg_dir)
-    zip_path = os.path.join(parent, "auth2wd_spark.pyfiles.zip")
-    src_mtime = max(
-        os.path.getmtime(os.path.join(root, f))
+    return _fresh_zip(pkg_dir, os.path.join(os.path.dirname(pkg_dir), "auth2wd_spark.pyfiles.zip"))
+
+
+def _fresh_zip(pkg_dir: str, zip_path: str) -> str:
+    """`zip_path` holding every .py file under `pkg_dir`, rebuilt when one is
+    newer than the zip or when the zip's members differ from the files: a
+    deleted module must not stay importable on executors."""
+    name = os.path.basename(pkg_dir)
+    sources = {
+        os.path.join(name, os.path.relpath(os.path.join(root, f), pkg_dir)): os.path.join(root, f)
         for root, _dirs, files in os.walk(pkg_dir)
         for f in files
         if f.endswith(".py")
-    )
-    if os.path.exists(zip_path) and os.path.getmtime(zip_path) >= src_mtime:
-        return zip_path
+    }
+    newest = max(map(os.path.getmtime, sources.values()))
+    if os.path.exists(zip_path) and os.path.getmtime(zip_path) >= newest:
+        with zipfile.ZipFile(zip_path) as zf:
+            if set(zf.namelist()) == set(sources):
+                return zip_path
     tmp = zip_path + ".tmp"
     with zipfile.ZipFile(tmp, "w", zipfile.ZIP_DEFLATED) as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            for f in sorted(files):
-                if not f.endswith(".py"):
-                    continue
-                full = os.path.join(root, f)
-                rel = os.path.join("auth2wd_spark", os.path.relpath(full, pkg_dir))
-                zf.write(full, rel)
+        for rel, full in sorted(sources.items()):
+            zf.write(full, rel)
     os.replace(tmp, zip_path)
     return zip_path
 

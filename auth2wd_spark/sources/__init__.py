@@ -6,4 +6,4 @@ emitted as *candidate* rows and resolved by the linking joins
 (auth2wd_spark.operators.linking).
 """
 
-from .registry import PARSERS, get_parser, parse_record  # noqa: F401
+from .registry import PARSERS, parse_record  # noqa: F401

@@ -29,7 +29,7 @@ from __future__ import annotations
 from typing import Any
 
 from ..functions.dates import parse_date
-from ..functions.extid import do_not_use_external_url, subj_key, url2external_id
+from ..functions.extid import do_not_use_external_url, url2external_id
 from ..functions.labels import (
     limit_string_length,
     lowercase_first_letter,
@@ -42,7 +42,6 @@ from ..properties import (
     P_LANGUAGES,
     P_SEX_OR_GENDER,
     P_VIAF,
-    STATED_IN,
     prop2key,
 )
 
@@ -111,18 +110,17 @@ def _snak_key(row: Row) -> tuple:
 
 
 class MetaItemBuilder:
-    """Per-record accumulator with the reference's dedup-on-insert rules."""
+    """Per-record accumulator with the reference's dedup-on-insert rules.
+
+    `rows` is the record's one store: `labels`, `aliases`, `descriptions`
+    and `prop_text` are read-only views over it.
+    """
 
     def __init__(self) -> None:
         self.rows: list[Row] = []
         self._ord = 0
-        self._claims: list[Row] = []  # kind == 'claim' only, for dedup checks
         self._claim_index: dict[tuple, Row] = {}  # (snak_key, qualifiers) → row
         self._date_prec_max: dict[str, int] = {}  # P569/P570 → max precision seen
-        self.labels: list[tuple[str, str]] = []
-        self.aliases: list[tuple[str, str]] = []
-        self.descriptions: list[tuple[str, str]] = []
-        self.prop_text: list[tuple[int, str]] = []
 
     def _next_ord(self) -> int:
         self._ord += 1
@@ -173,7 +171,6 @@ class MetaItemBuilder:
                 row["rank"] = "deprecated"
             self._date_prec_max[row["pred"]] = max(best, obj_precision or 0)
         row["ord"] = self._next_ord()
-        self._claims.append(row)
         self._claim_index[key] = row
         self.rows.append(row)
         return True
@@ -212,7 +209,6 @@ class MetaItemBuilder:
     def add_prop_text(self, prop: int, text: str) -> None:
         if do_not_use_external_url(text):
             return
-        self.prop_text.append((prop, text))
         self.rows.append(
             {
                 "kind": "prop_text",
@@ -223,38 +219,56 @@ class MetaItemBuilder:
         )
 
     # -- terms -------------------------------------------------------------
-    def label_in_locale(self, lang: str) -> str | None:
-        for lg, v in self.labels:
-            if lg == lang:
-                return v
+    def _terms(self, kind: str) -> list[tuple[str, str]]:
+        return [(r["obj_lang"], r["obj_value"]) for r in self.rows if r["kind"] == kind]
+
+    @property
+    def labels(self) -> list[tuple[str, str]]:
+        return self._terms("label")
+
+    @property
+    def aliases(self) -> list[tuple[str, str]]:
+        return self._terms("alias")
+
+    @property
+    def descriptions(self) -> list[tuple[str, str]]:
+        return self._terms("description")
+
+    @property
+    def prop_text(self) -> list[tuple[int, str]]:
+        return [
+            (r["fallback_property"], r["fallback_text"])
+            for r in self.rows
+            if r["kind"] == "prop_text"
+        ]
+
+    def _term_in_locale(self, kind: str, lang: str) -> str | None:
+        for r in self.rows:
+            if r["kind"] == kind and r["obj_lang"] == lang:
+                return r["obj_value"]
         return None
+
+    def label_in_locale(self, lang: str) -> str | None:
+        return self._term_in_locale("label", lang)
 
     def description_in_locale(self, lang: str) -> str | None:
-        for lg, v in self.descriptions:
-            if lg == lang:
-                return v
-        return None
+        return self._term_in_locale("description", lang)
+
+    def _push_term(self, kind: str, lang: str, value: str) -> None:
+        self.rows.append(
+            {"kind": kind, "obj_lang": lang, "obj_value": value, "ord": self._next_ord()}
+        )
 
     def push_label(self, lang: str, value: str) -> None:
-        self.labels.append((lang, value))
-        self.rows.append(
-            {"kind": "label", "obj_lang": lang, "obj_value": value, "ord": self._next_ord()}
-        )
+        self._push_term("label", lang, value)
 
     def push_alias(self, lang: str, value: str) -> None:
-        self.aliases.append((lang, value))
-        self.rows.append(
-            {"kind": "alias", "obj_lang": lang, "obj_value": value, "ord": self._next_ord()}
-        )
+        self._push_term("alias", lang, value)
 
     def push_description(self, lang: str, value: str) -> None:
-        self.descriptions.append((lang, value))
-        self.rows.append(
-            {"kind": "description", "obj_lang": lang, "obj_value": value, "ord": self._next_ord()}
-        )
+        self._push_term("description", lang, value)
 
     def clear_descriptions(self) -> None:
-        self.descriptions.clear()
         self.rows = [r for r in self.rows if r["kind"] != "description"]
 
     # -- cleanup (meta_item.rs:184-220) -------------------------------------
@@ -272,11 +286,7 @@ class MetaItemBuilder:
                 continue
             seen.add(key)
             deduped.append(r)
-        self.prop_text = [(r["fallback_property"], r["fallback_text"]) for r in deduped]
         self.rows = [r for r in self.rows if r["kind"] != "prop_text"] + deduped
-
-    def claims(self) -> list[Row]:
-        return list(self._claims)
 
 
 class SourceParser:
@@ -290,9 +300,6 @@ class SourceParser:
     primary_language: str = "en"
     transforms_label: bool = False  # transform_label_last_first_name override
     has_ref: bool = True  # False for aggregators (VIAF viaf.rs:116-118, WorldCat)
-
-    def stated_in(self) -> str:
-        return STATED_IN[self.property]
 
     def get_key_url(self, record_id: str) -> str:
         raise NotImplementedError
@@ -451,6 +458,3 @@ class SourceParser:
         self, record_id: str, body: str, b: MetaItemBuilder, extra_body: str | None = None
     ) -> str | None:
         raise NotImplementedError
-
-    def subject(self, record_id: str) -> str:
-        return subj_key(self.property, record_id)

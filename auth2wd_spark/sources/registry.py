@@ -1,9 +1,9 @@
 """Parser registry + URL routing patterns.
 
-The Spark-side router (auth2wd_spark.sources.router) compiles ROUTES into
-JVM-side regexp expressions so that source detection and id extraction
-never leave whole-stage codegen; the Python table here is the single
-source of truth and also drives the in-UDF dispatch.
+The Spark-side router (auth2wd_spark.operators.extract.route) compiles
+ROUTES into JVM-side regexp expressions so that source detection and id
+extraction never leave whole-stage codegen; the Python table here is the
+single source of truth, and `parse_record` is the in-UDF dispatch.
 
 Mirrors SUPPORTED_PROPERTIES (/root/reference/src/supported_property.rs:29-53).
 """
@@ -77,10 +77,6 @@ ROUTES: tuple[tuple[str, str], ...] = (
     ("gbif_images", r"^https?://api\.gbif\.org/v1/occurrence/search\?limit=20&media_type=stillImage&taxon_key=(\d+)$"),
     ("pubchem", r"^https?://pubchem\.ncbi\.nlm\.nih\.gov/rest/pug_view/data/compound/(\d+)/JSON/?$"),
 )
-
-
-def get_parser(source: str) -> SourceParser | None:
-    return PARSERS.get(source)
 
 
 def parse_record(

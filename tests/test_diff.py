@@ -66,3 +66,31 @@ def test_merge_with_base(incoming, base):
     assert ("c1", "P4765") not in added  # dropped by fix_images first
     altered = {(r["component"], r["pred"]) for r in out["altered_statements"].collect()}
     assert altered == {("c2", "P31")}  # matching claim carrying new refs
+
+
+# the claim identity is merge's: main snak + qualifiers, with P225 matching
+# whatever its qualifiers (meta_item.rs:309), and a base claim's NULL
+# qualifiers equal to the pipeline's '' (no qualifiers)
+def test_merge_diff_keys_on_qualifiers(spark):
+    ref = [("Q36578", "P227", "1")]
+    start = '[["P580", "time", "+1990-00-00T00:00:00Z"]]'
+    merged = _claims(
+        spark,
+        [
+            ("c1", "P39", "item", "Q1", None, None, "normal", start, ref),
+            ("c1", "P225", "string", "Licea", None, None, "normal", start, ref),
+            ("c1", "P31", "item", "Q5", None, None, "normal", "", ref),
+        ],
+    )
+    base = _claims(
+        spark,
+        [
+            ("c1", "P39", "item", "Q1", None, None, "normal", "", []),
+            ("c1", "P225", "string", "Licea", None, None, "normal", "", []),
+            ("c1", "P31", "item", "Q5", None, None, "normal", None, []),
+        ],
+    )
+    added = {r["pred"] for r in merge_diff(merged, base).collect()}
+    assert added == {"P39"}
+    altered = {r["pred"] for r in merge_with_base(merged, base)["altered_statements"].collect()}
+    assert altered == {"P225", "P31"}

@@ -226,3 +226,26 @@ def test_pubchem():
     assert b.labels and b.labels[0][0] == "en"
     assert claim_values(b, "P31") == ["Q113145171"]
     assert claim_values(b, "P279") == ["Q11173"]
+
+
+# the builder's term lists are views over its rows (no fixture needed)
+def test_builder_views():
+    from auth2wd_spark.sources.base import MetaItemBuilder
+
+    b = MetaItemBuilder()
+    b.push_label("de", "Muster, Erika")
+    b.push_alias("de", "Muster, E.")
+    b.push_description("en", "writer")
+    b.add_prop_text(21, "unknown")
+    b.add_prop_text(19, "Berlin")
+    b.add_prop_text(21, "unknown")
+    assert b.label_in_locale("de") == "Muster, Erika"
+    assert b.label_in_locale("en") is None
+    assert b.description_in_locale("en") == "writer"
+    b.clear_descriptions()
+    b.cleanup()
+    assert b.labels == [("de", "Muster, Erika")]
+    assert b.aliases == [("de", "Muster, E.")]
+    assert b.descriptions == []
+    assert b.prop_text == [(19, "Berlin"), (21, "unknown")]
+    assert [r["kind"] for r in b.rows] == ["label", "alias", "prop_text", "prop_text"]
